@@ -5,22 +5,43 @@ Re-expresses the reference's per-value Python coercion loop
 expressions — the whole path stays inside whole-stage codegen; there is
 no Python UDF anywhere in the hot path.
 
-Strategy ("dual wire parse"):
+Strategy (wire columns, one parse per struct level):
 
-1. Each struct level is parsed **twice** with ``from_json``, one level
-   at a time (nested objects survive as raw JSON text and are re-parsed
-   the same way one level down — the reference's ``map_source``
-   recursion):
+1. ``with_wires`` parses each struct level exactly **once** into named
+   *wire columns* — one ``select`` per nesting depth. The root level
+   parses the document text; each nested level parses its parent's
+   (multi-value-collapsed) field text, so nested objects behave exactly
+   like the top level (the reference's ``map_source`` recursion). Each
+   level gets three columns:
 
-   - *scalar wire*: every field is ``StringType``. Spark's JSON parser
-     stores the raw JSON text for non-string values, so ``3`` → ``"3"``,
-     ``[1,2]`` → ``"[1,2]"``, ``{"a":1}`` → ``"{\"a\":1}"``.
-   - *array wire*: every field is ``array<string>``. Scalars parse to
-     NULL here; only genuine JSON arrays survive. This disambiguates a
-     real multi-value field from a string that merely *looks* like
-     ``"[1,2]"`` — by JSON syntax, at every nesting depth — something
-     the reference gets for free from Python ``type(v) is list``
-     (``:132``).
+   - *scalar wire*: ``from_json`` with every field ``StringType``.
+     Spark's JSON parser stores the raw JSON text for non-string
+     values, so ``3`` → ``"3"``, ``[1,2]`` → ``"[1,2]"``,
+     ``{"a":1}`` → ``"{\"a\":1}"``.
+   - *array wire*: ``from_json`` with every field ``array<string>``.
+     Scalars parse to NULL here; only genuine JSON arrays survive. This
+     disambiguates a real multi-value field from a string that merely
+     *looks* like ``"[1,2]"`` — by JSON syntax, at every nesting depth —
+     something the reference gets for free from Python
+     ``type(v) is list`` (``:132``).
+   - *keys*: ``json_object_keys`` of the level's text — NULL unless the
+     text is a JSON object (the nested-struct NULL gate) and the source
+     of the unknown-key warning count.
+
+   Both ``parse_and_coerce``'s typed projection and the warning
+   aggregates (``warning_aggregates``) only *index* these columns
+   (``F.col(wire)[name]``), and share each leaf's cast expression
+   (``Wires.leaves``); neither contains a ``from_json``. This is
+   what keeps the parse count at two per level: Catalyst's
+   ``OptimizeCsvJsonExprs`` rewrites every ``from_json(text, s).field``
+   it can see into its own single-field ``from_json``, so a projection
+   that inlined the parse into each field access would parse each
+   document once per *field* (48 times for the FIXTURES.md A1 mapping
+   instead of 8). A wire column is referenced many times, so
+   ``CollapseProject`` keeps it in its own Project and the rule has
+   nothing to prune. The warning observation sits between the wires
+   and the typed projection (``parse_and_coerce(observation=...)``),
+   reading the same parsed columns.
 
 2. Per field: if the array-wire value is non-null → multi-value field →
    collapse to its first element (reference ``:129-137``: "Taking the
@@ -42,12 +63,16 @@ Strategy ("dual wire parse"):
 
 Unknown document fields are dropped implicitly (from_json ignores keys
 not in the schema — reference drops them with a counted warning,
-``:115-119``; the count comes from ``json_object_keys`` set-difference).
+``:115-119``; the count comes from each level's keys wire minus the
+schema's field names).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from dataclasses import dataclass
+from functools import cached_property
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -78,8 +103,8 @@ def scalar_wire_struct(schema: T.StructType) -> T.StructType:
     """ONE parse level: every field — struct fields included — becomes
     StringType. Spark's JSON parser stores the raw JSON text of
     whatever the value is (number, bool, array, **object**), so each
-    nested object survives as text and the coercion recursion can
-    re-apply the same dual parse at the next level. This is what makes
+    nested object survives as text and ``with_wires`` can parse it
+    the same way as its own level one depth down. This is what makes
     nested levels behave identically to the top level (the reference's
     ``map_source`` recursion): a nested ``{"port":[9200,9300]}`` is
     still a *JSON array token* when its level is parsed, never a quoted
@@ -189,37 +214,117 @@ def coerce_leaf(s: Column, dtype: T.DataType) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# wire columns: each struct level parsed once
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Wires:
+    """Where ``with_wires`` put each struct level's parse: struct path
+    (``()`` for the document root) → names of its ``(scalar, array,
+    keys)`` wire columns."""
+
+    schema: T.StructType
+    levels: dict[tuple[str, ...], tuple[str, str, str]]
+
+    def columns(self, path: tuple[str, ...]) -> tuple[Column, Column, Column]:
+        return tuple(F.col(n) for n in self.levels[path])
+
+    @cached_property
+    def leaves(self) -> dict[tuple[str, ...], tuple[Column, Column]]:
+        """Leaf path → (its collapsed wire text, that text cast to the
+        leaf type — the element type of an ``ArrayType`` leaf), built
+        once and shared by the typed projection and the cast-failure
+        counts."""
+        out: dict[tuple[str, ...], tuple[Column, Column]] = {}
+
+        def visit(path: tuple[str, ...], schema: T.StructType) -> None:
+            scalar, arrays, _ = self.columns(path)
+            for f in schema.fields:
+                dt = f.dataType
+                if isinstance(dt, T.StructType):
+                    visit(path + (f.name,), dt)
+                    continue
+                picked = _picked(scalar[f.name], arrays[f.name])
+                out[path + (f.name,)] = (picked, coerce_leaf(picked, _element_type(dt)))
+
+        visit((), self.schema)
+        return out
+
+
+def _element_type(dt: T.DataType) -> T.DataType:
+    """A leaf's scalar type: ``multivalue='array'`` schemas declare
+    ``ArrayType`` leaves whose elements are what gets cast."""
+    return dt.elementType if isinstance(dt, T.ArrayType) else dt
+
+
+def _picked(scalar: Column, arrays: Column) -> Column:
+    """One field's value after multi-value collapse: the first element
+    of a JSON array, an empty array → missing (reference :132-137;
+    ``F.get`` is 0-indexed and null-safe under ANSI), else the scalar
+    wire text."""
+    return F.when(arrays.isNotNull(), F.get(arrays, 0)).otherwise(scalar)
+
+
+def with_wires(
+    df: DataFrame, schema: T.StructType, value_col: str = "value"
+) -> tuple[DataFrame, Wires]:
+    """Append the wire columns of every struct level of ``schema`` to
+    ``df``: one ``select`` per nesting depth, each level's text parsed
+    exactly once (module docstring, step 1). The root level parses
+    ``value_col``; a nested level parses its field's collapsed text from
+    the parent level's wires. Wire names start with a prefix that no
+    column of ``df`` starts with, so no input column — nor a document
+    field literally called ``value`` — is ever shadowed."""
+    prefix = "_wire"
+    while any(c.startswith(prefix) for c in df.columns):
+        prefix = "_" + prefix
+    levels: dict[tuple[str, ...], tuple[str, str, str]] = {}
+    depth = [((), schema, F.col(value_col))]
+    while depth:
+        cols, below = [], []
+        for path, struct, text in depth:
+            names = tuple(f"{prefix}{len(levels)}_{k}" for k in "sak")
+            levels[path] = names
+            cols += [
+                F.from_json(text, scalar_wire_struct(struct)).alias(names[0]),
+                F.from_json(text, array_wire_struct(struct)).alias(names[1]),
+                F.json_object_keys(text).alias(names[2]),
+            ]
+            scalar, arrays = F.col(names[0]), F.col(names[1])
+            below += [
+                (path + (f.name,), f.dataType, _picked(scalar[f.name], arrays[f.name]))
+                for f in struct.fields
+                if isinstance(f.dataType, T.StructType)
+            ]
+        df = df.select("*", *cols)
+        depth = below
+    return df, Wires(schema, levels)
+
+
+# ---------------------------------------------------------------------------
 # struct recursion + multi-value collapse
 # ---------------------------------------------------------------------------
 
 
 def _coerce_struct(
-    scalar: Column, arrays: Column, schema: T.StructType, multivalue: str
+    wires: Wires, path: tuple[str, ...], schema: T.StructType, multivalue: str
 ) -> list[tuple[str, Column]]:
-    """Coerce one wire-struct level → list of (name, typed Column).
-
-    ``scalar``: one-level struct whose every field is the raw JSON
-    text of the value; ``arrays``: one-level struct with
-    ``array<string>`` fields (NULL when the JSON value was not an
-    array). Each nested struct level re-parses its raw text with the
-    same pair of wires, so multi-value collapse and array detection
-    work identically at every depth — mirroring the reference's
+    """Coerce one struct level → list of (name, typed Column), reading
+    only that level's wire columns. A nested struct field reads its own
+    level's wires, so multi-value collapse and array detection work
+    identically at every depth — mirroring the reference's
     ``map_source`` recursion (dump-es-parquet:112-144).
     """
+    scalar, arrays, _ = wires.columns(path)
     out: list[tuple[str, Column]] = []
     for f in schema.fields:
         s = scalar[f.name]
         a = arrays[f.name]
-        # multi-value: first element, empty list → missing (reference
-        # :132-137; F.get is 0-indexed and null-safe under ANSI)
-        picked = F.when(a.isNotNull(), F.get(a, 0)).otherwise(s)
         if isinstance(f.dataType, T.StructType):
-            sub = _coerce_struct(
-                F.from_json(picked, scalar_wire_struct(f.dataType)),
-                F.from_json(picked, array_wire_struct(f.dataType)),
-                f.dataType,
-                multivalue,
-            )
+            sub_path = path + (f.name,)
+            sub = _coerce_struct(wires, sub_path, f.dataType, multivalue)
+            keys = wires.columns(sub_path)[2]
             out.append(
                 (
                     f.name,
@@ -227,28 +332,22 @@ def _coerce_struct(
                     # struct) for non-object text, so gate on "is this
                     # a JSON object" to keep NULL semantics
                     F.when(
-                        F.json_object_keys(picked).isNotNull(),
-                        F.struct(*[c.alias(n) for n, c in sub]),
+                        keys.isNotNull(), F.struct(*[c.alias(n) for n, c in sub])
                     ),
                 )
             )
+        elif multivalue == "array":
+            # engine extension: true ArrayType column. The output
+            # schema may already declare ArrayType leaves.
+            elem_dt = _element_type(f.dataType)
+            arr = F.coalesce(a, F.when(s.isNotNull(), F.array(s)))
+
+            def _elem_coercer(dt):
+                return lambda x: coerce_leaf(x, dt)
+
+            out.append((f.name, F.transform(arr, _elem_coercer(elem_dt))))
         else:
-            if multivalue == "array":
-                # engine extension: true ArrayType column. The output
-                # schema may already declare ArrayType leaves.
-                elem_dt = (
-                    f.dataType.elementType
-                    if isinstance(f.dataType, T.ArrayType)
-                    else f.dataType
-                )
-                arr = F.coalesce(a, F.when(s.isNotNull(), F.array(s)))
-
-                def _elem_coercer(dt):
-                    return lambda x: coerce_leaf(x, dt)
-
-                out.append((f.name, F.transform(arr, _elem_coercer(elem_dt))))
-            else:
-                out.append((f.name, coerce_leaf(picked, f.dataType)))
+            out.append((f.name, wires.leaves[path + (f.name,)][1]))
     return out
 
 
@@ -277,25 +376,33 @@ def parse_and_coerce(
     flatten: bool = False,
     multivalue: str = "first",
     keep_raw: bool = False,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Raw-JSON DataFrame (one ``_source`` doc per row in ``value_col``)
     → typed DataFrame matching ``schema``.
 
-    The full reference coercion pipeline (ops #11-#18 of SURVEY.md §2)
-    as a single declarative projection — Catalyst sees every cast and
-    keeps the whole thing in one codegen stage over the scan.
+    The full reference coercion pipeline (ops #11-#18 of SURVEY.md §2):
+    the wire columns (``with_wires``), then one declarative projection
+    over them — Catalyst sees every cast and keeps the whole thing in
+    codegen over the scan.
+
+    ``observation`` collects ``warning_aggregates`` on the wired frame,
+    between the parse and the typed projection, so the warning report
+    reads the same parsed columns and rides the first action on the
+    returned frame (no second pass over the data).
     """
-    raw = F.col(value_col)
-    scalar = F.from_json(raw, scalar_wire_struct(schema))
-    arrays = F.from_json(raw, array_wire_struct(schema))
-    cols = _coerce_struct(scalar, arrays, schema, multivalue)
+    wired, wires = with_wires(df, schema, value_col)
+    if observation is not None:
+        aggs = warning_aggregates(wires)
+        wired = wired.observe(observation, *[c.alias(n) for n, c in aggs.items()])
+    cols = _coerce_struct(wires, (), schema, multivalue)
     if flatten:
         projected = _flatten_columns(cols, schema)
     else:
         projected = [c.alias(n) for n, c in cols]
     if keep_raw:
-        projected = projected + [raw.alias("_raw")]
-    return df.select(*projected)
+        projected = projected + [F.col(value_col).alias("_raw")]
+    return wired.select(*projected)
 
 
 # ---------------------------------------------------------------------------
@@ -303,48 +410,45 @@ def parse_and_coerce(
 # ---------------------------------------------------------------------------
 
 
-def warning_aggregates(
-    schema: T.StructType, value_col: str = "value"
-) -> dict[str, Column]:
-    """Aggregate Columns for ``df.observe(...)`` reproducing the
-    reference's end-of-run warning report (``msg [N documents]``,
-    ``:304-305, 352-353``) without a second pass over the data:
+def warning_aggregates(wires: Wires) -> dict[str, Column]:
+    """Aggregate Columns over a ``with_wires`` frame (for
+    ``df.observe(...)``) reproducing the reference's end-of-run warning
+    report (``msg [N documents]``, ``:304-305, 352-353``) without a
+    second pass over the data. Like the reference's ``map_source``
+    recursion, every struct level counts, not only the top one:
 
-    - ``unknown_field_values``: total doc keys not in the schema
-      (reference drops each with a warning, ``:115-119``)
-    - ``multivalue_collapsed``: fields that were JSON arrays
-      (``field … is list - keeping first value``, ``:132-135``)
-    - ``<field>_cast_failures``: per-leaf count of non-null wire values
-      the cast dropped (``unable to convert field …``, ``:161-180``).
+    - ``unknown_field_values``: total object keys not in the schema, at
+      any depth (reference drops each with a warning, ``:115-119``)
+    - ``multivalue_collapsed``: fields that were JSON arrays, at any
+      depth (``field … is list - keeping first value``, ``:132-135``)
+    - ``<dotted.path>_cast_failures``: per-leaf count of non-null wire
+      values the cast dropped (``unable to convert field …``,
+      ``:161-180``); a top-level leaf's path is its bare name.
     """
-    raw = F.col(value_col)
-    scalar = F.from_json(raw, scalar_wire_struct(schema))
-    arrays = F.from_json(raw, array_wire_struct(schema))
-    known = F.array(*[F.lit(f.name) for f in schema.fields])
-    aggs: dict[str, Column] = {
+    unknown: list[Column] = []
+    multi: list[Column] = []
+    failures: dict[str, Column] = {}
+
+    def visit(path: tuple[str, ...], schema: T.StructType) -> None:
+        _, arrays, keys = wires.columns(path)
+        known = F.array(*[F.lit(f.name) for f in schema.fields])
+        unknown.append(F.coalesce(F.size(F.array_except(keys, known)), F.lit(0)))
+        # fields of this level that were JSON arrays (non-null array wire)
+        multi.append(
+            F.size(F.array_compact(F.array(*[arrays[f.name] for f in schema.fields])))
+        )
+        for f in schema.fields:
+            if isinstance(f.dataType, T.StructType):
+                visit(path + (f.name,), f.dataType)
+            elif not isinstance(_element_type(f.dataType), T.StringType):
+                picked, typed = wires.leaves[path + (f.name,)]
+                name = ".".join(path + (f.name,)) + "_cast_failures"
+                failures[name] = F.count_if(picked.isNotNull() & typed.isNull())
+
+    visit((), wires.schema)
+    return {
         "docs": F.count(F.lit(1)),
-        "unknown_field_values": F.sum(
-            F.coalesce(
-                F.size(F.array_except(F.json_object_keys(raw), known)), F.lit(0)
-            )
-        ),
-        "multivalue_collapsed": F.sum(
-            sum(
-                (
-                    F.when(arrays[f.name].isNotNull(), 1).otherwise(0)
-                    for f in schema.fields
-                ),
-                F.lit(0),
-            )
-        ),
+        "unknown_field_values": F.sum(sum(unknown, F.lit(0))),
+        "multivalue_collapsed": F.sum(sum(multi, F.lit(0))),
+        **failures,
     }
-    for f in schema.fields:
-        if isinstance(f.dataType, (T.StringType, T.StructType)):
-            continue
-        picked = F.when(
-            arrays[f.name].isNotNull(),
-            F.when(F.size(arrays[f.name]) > 0, F.element_at(arrays[f.name], 1)),
-        ).otherwise(scalar[f.name])
-        failed = picked.isNotNull() & coerce_leaf(picked, f.dataType).isNull()
-        aggs[f"{f.name}_cast_failures"] = F.sum(F.when(failed, 1).otherwise(0))
-    return aggs

@@ -13,9 +13,9 @@ import logging
 import traceback
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
-from dump_es_parquet_spark.coerce import parse_and_coerce, warning_aggregates
+from dump_es_parquet_spark.coerce import parse_and_coerce
 from dump_es_parquet_spark.sinks import (
     SinkOptions,
     bounded_rows_per_file,
@@ -123,18 +123,20 @@ def dump(
             rpf = _sample_rows_per_file(client_factory(), idx, scan, sink)
             if build_df:
                 schema = fetch_schema(client_factory(), idx, scan)
-                # one-pass warning observation riding the write job.
+                # one-pass warning observation riding the write job,
+                # observed on the parsed wire columns the typed
+                # projection reads (raw → wires → observe → typed).
                 # The write action must be the FIRST action on this
                 # plan — any earlier action (e.g. a sampling count)
                 # would satisfy Observation.get with truncated-sample
                 # numbers — hence the driver-side rpf sample above.
-                aggs = warning_aggregates(schema)
-                from pyspark.sql import Observation
-
                 obs = Observation(f"warnings-{idx}")
-                raw = raw.observe(obs, *[c.alias(n) for n, c in aggs.items()])
                 df = parse_and_coerce(
-                    raw, schema, flatten=scan.flatten, multivalue=scan.multivalue
+                    raw,
+                    schema,
+                    flatten=scan.flatten,
+                    multivalue=scan.multivalue,
+                    observation=obs,
                 )
                 if scan.order == "global" and scan.sort:
                     df = df.orderBy(*_sort_columns(scan.sort, df.columns))

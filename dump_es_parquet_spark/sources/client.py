@@ -467,17 +467,30 @@ class RestES:
     verify_certs: bool = True
 
     def _ssl_context(self):
+        """The client's TLS context, built on first use and reused by
+        every later request (building one re-reads the CA bundle);
+        None for plain http."""
         import ssl
 
         if not self.base_url.startswith("https"):
             return None
-        ctx = ssl.create_default_context(cafile=self.capath)
-        if self.cert:
-            ctx.load_cert_chain(self.cert, self.key)
-        if not self.verify_certs:
-            ctx.check_hostname = False
-            ctx.verify_mode = ssl.CERT_NONE
+        ctx = self.__dict__.get("_ctx")
+        if ctx is None:
+            ctx = ssl.create_default_context(cafile=self.capath)
+            if self.cert:
+                ctx.load_cert_chain(self.cert, self.key)
+            if not self.verify_certs:
+                ctx.check_hostname = False
+                ctx.verify_mode = ssl.CERT_NONE
+            self._ctx = ctx
         return ctx
+
+    def __getstate__(self):
+        # an SSLContext does not pickle; a client shipped to executors
+        # builds its own there on first use
+        state = dict(self.__dict__)
+        state.pop("_ctx", None)
+        return state
 
     def _req(self, method: str, path: str, body: dict | None = None) -> dict:
         data = json.dumps(body).encode() if body is not None else None

@@ -5,12 +5,17 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import re
 
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import Observation, Row
 from pyspark.sql import types as T
 
-from dump_es_parquet_spark.coerce import parse_and_coerce, warning_aggregates
+from dump_es_parquet_spark.coerce import (
+    parse_and_coerce,
+    warning_aggregates,
+    with_wires,
+)
 from dump_es_parquet_spark.schema import properties_to_struct
 
 PROPS = {
@@ -261,7 +266,8 @@ def test_warning_aggregates(spark):
         {"ts": "garbage"},
     ]
     df = spark.createDataFrame([(json.dumps(d),) for d in docs], "value string")
-    aggs = warning_aggregates(SCHEMA)
+    df, wires = with_wires(df, SCHEMA)
+    aggs = warning_aggregates(wires)
     row = df.agg(*[c.alias(n) for n, c in aggs.items()]).collect()[0]
     assert row.docs == 4
     assert row.unknown_field_values == 2
@@ -275,3 +281,92 @@ def test_no_python_udf_in_plan(spark):
     plan = parse_and_coerce(df, SCHEMA)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
+
+
+def test_nested_warnings_count_every_depth(spark):
+    """The reference's map_source recursion warns at every depth: a
+    nested bad cast gets its own dotted counter, and nested unknown
+    keys / multi-values join the top-level totals."""
+    docs = [
+        {"meta": {"port": "abc"}},
+        {"meta": {"host": "h", "extra": 1, "geo": {"city": "x", "zip": 2}}},
+        {"meta": {"host": ["a", "b"], "geo": {"city": ["y", "z"]}}},
+    ]
+    df = spark.createDataFrame([(json.dumps(d),) for d in docs], "value string")
+    obs = Observation("nested")
+    rows = parse_and_coerce(df, SCHEMA, observation=obs).collect()
+    assert [r.meta.port for r in rows] == [None, None, None]
+    assert rows[2].meta.host == "a" and rows[2].meta.geo.city == "y"
+    got = obs.get
+    assert got["docs"] == 3
+    assert got["meta.port_cast_failures"] == 1
+    assert got["unknown_field_values"] == 2
+    assert got["multivalue_collapsed"] == 2
+    assert got["id_cast_failures"] == 0
+
+
+def test_wire_names_never_shadow_input_columns(spark):
+    """Wire columns get a prefix no input column starts with; a mapping
+    field literally named ``value`` coerces from the ``value`` text."""
+    st = properties_to_struct({"value": {"type": "long"}, "_wire0_s": {"type": "long"}})
+    df = spark.createDataFrame(
+        [(json.dumps({"value": 5, "_wire0_s": 6}), "x")],
+        "value string, _wire0_s string",
+    )
+    wired, wires = with_wires(df, st)
+    assert set(df.columns) <= set(wired.columns)
+    assert not set(df.columns) & {n for ns in wires.levels.values() for n in ns}
+    [r] = parse_and_coerce(df, st).collect()
+    assert (r.value, r["_wire0_s"]) == (5, 6)
+
+
+# A1-shaped mapping (FIXTURES.md A1): three struct fields at any depth
+# (location, meta, meta.geo).
+A1_PROPS = {
+    **PROPS,
+    "count_b": {"type": "byte"},
+    "count_s": {"type": "short"},
+    "ratio_h": {"type": "half_float"},
+    "ratio_f": {"type": "float"},
+    "body": {"type": "text"},
+    "legacy": {"type": "string"},
+    "location": {"type": "geo_point"},
+    "client_ip": {"type": "ip"},
+    "mystery": {"type": "weird_type"},
+}
+
+
+def _struct_fields(st: T.StructType) -> int:
+    return sum(
+        1 + _struct_fields(f.dataType)
+        for f in st.fields
+        if isinstance(f.dataType, T.StructType)
+    )
+
+
+def _distinct_from_json(plan: str) -> set[str]:
+    found = set()
+    for m in re.finditer(r"from_json\(", plan):
+        i, depth = m.end(), 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        found.add(plan[m.start() : i])
+    return found
+
+
+@pytest.mark.parametrize("props", [PROPS, A1_PROPS], ids=["SCHEMA", "A1"])
+def test_plan_parses_each_struct_level_once(spark, props):
+    """Plan pin: the observed, coerced frame parses each struct level
+    with exactly two from_json (scalar + array wire) — Catalyst's
+    OptimizeCsvJsonExprs must find no from_json(...).field to split into
+    per-field parses — and the warning observation parses nothing."""
+    schema = properties_to_struct(props)
+    df = spark.createDataFrame([("{}",)], "value string")
+    out = parse_and_coerce(df, schema, observation=Observation("pin"))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    want = 2 * (1 + _struct_fields(schema))
+    assert want == (6 if props is PROPS else 8)
+    assert len(_distinct_from_json(plan)) == want
+    metrics = [ln for ln in plan.splitlines() if "CollectMetrics" in ln]
+    assert len(metrics) == 1 and "from_json" not in metrics[0]

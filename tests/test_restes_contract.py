@@ -211,6 +211,42 @@ def test_mapping_and_settings_paths(es_url):
     assert paths == ["/metrics/_mapping", "/metrics-*/_settings"]
 
 
+def test_tls_context_built_once_and_client_still_pickles(monkeypatch):
+    """One SSL context per client, not one per request (each build
+    re-reads the CA bundle); a used client still pickles to executors
+    and builds its own context there."""
+    import io
+    import ssl
+    import urllib.request
+
+    from pyspark import cloudpickle
+
+    real = ssl.create_default_context
+    built = []
+
+    def counting(*args, **kwargs):
+        built.append(kwargs.get("cafile"))
+        return real(*args, **kwargs)
+
+    def fake_urlopen(req, timeout=None, context=None):
+        assert isinstance(context, ssl.SSLContext)
+        return io.BytesIO(json.dumps({"path": req.full_url}).encode())
+
+    monkeypatch.setattr(ssl, "create_default_context", counting)
+    monkeypatch.setattr(urllib.request, "urlopen", fake_urlopen)
+    es = RestES("https://es.invalid:9200", verify_certs=False)
+    for _ in range(3):
+        es.get_mapping("metrics")
+    es.search("metrics", size=1)
+    assert len(built) == 1
+
+    copy = cloudpickle.loads(cloudpickle.dumps(es))
+    assert copy == es
+    assert copy.get_mapping("m")["path"] == "https://es.invalid:9200/m/_mapping"
+    assert len(built) == 2
+    assert RestES("http://es.invalid")._ssl_context() is None
+
+
 def test_scroll_flow_q_and_body_interplay(es_url):
     es = RestES(es_url)
     hits = list(iter_hits(

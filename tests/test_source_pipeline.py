@@ -206,6 +206,78 @@ def test_dump_warning_report(spark, tmp_path):
     assert "multivalue_collapsed [1 documents]" in report
 
 
+def test_dump_warning_report_counts_nested_fields(spark, tmp_path):
+    """One nested dirty doc of each kind: a nested bad cast reports
+    under its dotted path; nested unknown keys and multi-values join
+    the top-level totals (reference map_source recursion)."""
+    mapping = {
+        "host": {"type": "keyword"},
+        "meta": {
+            "properties": {
+                "port": {"type": "integer"},
+                "geo": {"properties": {"city": {"type": "keyword"}}},
+            }
+        },
+    }
+    fixture = {
+        "nested": {
+            "mapping": mapping,
+            "docs": [
+                {"host": "a", "meta": {"port": "abc"}},
+                {"host": "b", "meta": {"port": 1, "extra": 1}},
+                {"host": "c", "meta": {"port": 2, "geo": {"city": ["x", "y"]}}},
+                {"host": "d", "meta": {"port": 3, "geo": {"city": "z"}}},
+            ],
+        }
+    }
+    res = dump(
+        spark,
+        lambda: MockES(fixture),
+        "nested",
+        str(tmp_path),
+        ScanOptions(slices=1),
+        SinkOptions(output="parquet"),
+    )
+    assert not res.errors
+    counts = {k: v for k, v in res.warnings["nested"].items() if v}
+    assert counts == {
+        "docs": 4,
+        "meta.port_cast_failures": 1,
+        "unknown_field_values": 1,
+        "multivalue_collapsed": 1,
+    }
+    report = "\n".join(res.warning_report())
+    assert "nested: meta.port_cast_failures [1 documents]" in report
+    back = spark.read.parquet(str(tmp_path / "nested")).orderBy("host").collect()
+    assert [r.meta.port for r in back] == [None, 1, 2, 3]
+    assert [r.meta.geo and r.meta.geo.city for r in back] == [None, None, "x", "z"]
+
+
+def test_dump_multivalue_array_counts_cast_failures(spark, tmp_path):
+    """multivalue='array' schemas declare ArrayType leaves: the warning
+    observation casts their first element to the element type (a cast
+    to the array type itself fails analysis and loses the index)."""
+    fixture = {
+        "arr": {
+            "mapping": MAPPING,
+            "docs": [{"host": "a", "port": [1, 2]}, {"host": "b", "port": "x"}],
+        }
+    }
+    res = dump(
+        spark,
+        lambda: MockES(fixture),
+        "arr",
+        str(tmp_path),
+        ScanOptions(slices=1, multivalue="array"),
+        SinkOptions(output="parquet"),
+    )
+    assert not res.errors
+    counts = {k: v for k, v in res.warnings["arr"].items() if v}
+    assert counts == {"docs": 2, "multivalue_collapsed": 1, "port_cast_failures": 1}
+    back = spark.read.parquet(str(tmp_path / "arr")).orderBy("host").collect()
+    assert [r.port for r in back] == [[1, 2], [None]]
+
+
 def test_dump_csv_requires_flatten(spark, tmp_path):
     fixture = {
         "nested": {
