@@ -21,7 +21,7 @@ import sys
 from dump_es_parquet_spark.pipeline import UBER, dump
 from dump_es_parquet_spark.session import get_spark
 from dump_es_parquet_spark.sinks import DEFAULT_MAX_MB, DEFAULT_MAX_ROWS, SinkOptions
-from dump_es_parquet_spark.sources.scan import DEFAULT_SORT, ScanOptions
+from dump_es_parquet_spark.sources.scan import DEFAULT_SORT, ScanOptions, effective_slices
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -164,34 +164,26 @@ def _follow(spark, args) -> int:
         )
         return 2
     register(spark)
-    b = (
-        spark.readStream.format("esdump")
-        .option("index", args.index)
-        .option("stream_mode", "timeslice")
-        .option("ts_field", args.ts_field)
-        .option("slices", str(args.slices))
-        .option("size", str(args.size))
-        .option("flatten", "true" if args.flatten else "false")
-        .option("multivalue", args.multivalue)
+    # the batch dump's scan flags, as esdump options (unset ones omitted)
+    opts = dict(
+        index=args.index, stream_mode="timeslice", ts_field=args.ts_field,
+        chunk_seconds=args.chunk_seconds, query=args.query,
+        fields=args.fields, sort=args.sort, size=args.size,
+        scroll=args.scroll, cursor=args.cursor, pit=not args.no_pit,
+        slices=args.slices, flatten=args.flatten, multivalue=args.multivalue,
     )
-    if args.query:
-        b = b.option("query", args.query)
-    if args.chunk_seconds:
-        b = b.option("chunk_seconds", str(args.chunk_seconds))
     fixture_path = getattr(args, "fixture_json", None)
     if fixture_path:
         with open(fixture_path) as f:
-            b = b.option("fixture_json", f.read())
+            opts["fixture_json"] = f.read()
     else:
-        b = (
-            b.option("url", args.es)
-            .option("timeout", str(args.timeout))
+        opts.update(
+            url=args.es, timeout=args.timeout, cert=args.cert, key=args.key,
+            capath=args.capath, verify_certs=not args.no_verify_certs,
         )
-        for k in ("cert", "key", "capath"):
-            if getattr(args, k):
-                b = b.option(k, getattr(args, k))
-        if args.no_verify_certs:
-            b = b.option("verify_certs", "false")
+    b = spark.readStream.format("esdump").options(
+        **{k: v for k, v in opts.items() if v is not None}
+    )
     out_dir = os.path.join(args.out, args.index)
     ck = args.checkpoint or os.path.join(args.out, f"_checkpoint_{args.index}")
     df = b.load()
@@ -305,14 +297,6 @@ def main(argv: list[str] | None = None) -> int:
                 verify_certs=not args.no_verify_certs,
             )
 
-    if args.cursor == "search_after" and args.no_pit and args.slices > 1:
-        print(
-            "warning: --no-pit disables sliced scans (ES rejects the "
-            "slice parameter outside a PIT/scroll context); running "
-            "single-slice. Use --cursor scroll for parallel scans on "
-            "pre-7.10 servers.",
-            file=sys.stderr,
-        )
     scan = ScanOptions(
         query=args.query,
         fields=args.fields,
@@ -320,12 +304,20 @@ def main(argv: list[str] | None = None) -> int:
         size=args.size,
         scroll=args.scroll,
         cursor=args.cursor,
-        pit=args.cursor == "search_after" and not args.no_pit,
+        pit=not args.no_pit,
         slices=args.slices,
         flatten=args.flatten,
         multivalue=args.multivalue,
         order=args.order,
     )
+    if effective_slices(scan) < scan.slices:
+        print(
+            "warning: --no-pit disables sliced scans (ES rejects the "
+            "slice parameter outside a PIT/scroll context); running "
+            "single-slice. Use --cursor scroll for parallel scans on "
+            "pre-7.10 servers.",
+            file=sys.stderr,
+        )
     sink = SinkOptions(
         output=args.output,
         compression=None if args.compression == "uncompressed" else args.compression,

@@ -1,13 +1,15 @@
 """Pure-Python document coercion — the same semantics as
 ``coerce.py``'s Column-expression path, for contexts where rows are
-already Python objects (the Python DataSource reader, where each hit
-arrives as a ``json.loads``-ed dict from the HTTP response).
+already Python objects (the ``esdump`` Python DataSource readers,
+where each hit arrives as a ``json.loads``-ed dict from the HTTP
+response).
 
 Mirrors the reference's ``map_source`` (``dump-es-parquet:112-183``)
 branch-for-branch, with the engine's spec decisions (UTC, flatten
 works, multivalue='array' mode). Kept deliberately tiny — the hot
 analytical path is the expression version; this one only runs inside
-source readers where the data is Python-native anyway.
+the ``esdump`` batch reader and both stream readers, through
+``sources.scan.coerce_hits``, where the data is Python-native anyway.
 
 Known cosmetic divergence from the expression path: a JSON *number*
 arriving in a string-typed field renders Python-style here

@@ -33,7 +33,7 @@ import urllib.error
 import urllib.parse
 import urllib.request
 from dataclasses import dataclass, field
-from typing import Any, Callable, Iterable
+from typing import Any, Callable, Iterable, Iterator
 
 
 class TransportError(Exception):
@@ -616,7 +616,7 @@ def with_sort_tiebreaker(sort: str | None, pit: bool) -> str:
     return f"{sort},{tb}" if sort else tb
 
 
-def iter_hits_search_after(
+def iter_pages_search_after(
     client,
     index: str,
     *,
@@ -629,23 +629,24 @@ def iter_hits_search_after(
     backoff_s: float = 1.0,
     pit: bool = False,
     keep_alive: str = "1h",
-) -> Iterable[dict]:
+    cursor: list | None = None,
+) -> Iterator[tuple[list[dict], list | None]]:
     """``search_after`` pagination loop — the retry-idempotent cursor
     (SURVEY.md §7 hard part 2): unlike a scroll id, the sort-key cursor
     is *resumable*, so a retried page re-requests exactly where the
     last successful page ended instead of consuming a one-shot
-    server-side cursor.
+    server-side cursor. Yields ``(hits, cursor)`` per non-empty page;
+    passing that ``cursor`` back resumes right after the page.
 
     The sort always ends in a unique tie-breaker (see
-    ``with_sort_tiebreaker``) and the first page omits ``search_after``
-    entirely. With ``pit=True`` a point-in-time context is opened per
-    slice and threaded through every page, giving the same snapshot
-    isolation as the reference's scroll context
-    (dump-es-parquet:224,261) — without it, a dump concurrent with
-    writes can see skew or duplicates."""
+    ``with_sort_tiebreaker``) and a scan from the start (``cursor``
+    None) omits ``search_after`` entirely. With ``pit=True`` a
+    point-in-time context is opened per scan and threaded through every
+    page, giving the same snapshot isolation as the reference's scroll
+    context (dump-es-parquet:224,261) — without it, a dump concurrent
+    with writes can see skew or duplicates."""
     sort_eff = with_sort_tiebreaker(sort, pit)
     pit_id = client.open_pit(index, keep_alive)["id"] if pit else None
-    cursor: list | None = None  # None → first page, omit search_after
     try:
         while True:
             resp = with_retry(
@@ -667,8 +668,8 @@ def iter_hits_search_after(
             hits = resp["hits"]["hits"]
             if not hits:
                 return
-            yield from hits
             nxt = resp.get("last_sort")
+            yield hits, cursor if nxt is None else nxt
             if nxt is None or nxt == cursor:
                 return
             cursor = nxt
@@ -678,6 +679,12 @@ def iter_hits_search_after(
                 client.close_pit(pit_id)
             except Exception:  # best-effort: PITs expire via keep_alive
                 pass
+
+
+def iter_hits_search_after(client, index: str, **page_args) -> Iterable[dict]:
+    """The hits of ``iter_pages_search_after`` (same arguments)."""
+    for hits, _ in iter_pages_search_after(client, index, **page_args):
+        yield from hits
 
 
 def iter_hits(

@@ -12,12 +12,15 @@ Options:
 
 - ``url``: ES/OS base URL (RestES), or ``fixture_json``: canned
   fixture (MockES — tests)
-- ``index`` (required), ``query``, ``fields``, ``sort``, ``size``,
-  ``scroll``, ``slices``, ``flatten``, ``multivalue``, ``timeout``
+- ``index`` (required), ``timeout``, and the scan options that
+  ``ScanOptions.from_options`` parses (``sort`` unset by default)
 
+Each partition is one slice read by ``scan.iter_slice_hits``, the batch
+scan's slice reader, with the pushed clauses AND-ed onto ``query``.
 Rows are coerced *in the reader* with the pure-Python twin of the
-expression coercion (``coerce_py``) — the data is already Python
-dicts from the HTTP JSON, so this is the natural (and single) pass.
+expression coercion (``scan.coerce_hits``) — the data is already
+Python dicts from the HTTP JSON, so this is the natural (and single)
+pass.
 
 **Column-pruning boundary.** The Python Data Source API exposes
 ``pushFilters`` but no column-prune hook (there is no Python
@@ -44,6 +47,7 @@ Register per-session with ``register(spark)``.
 from __future__ import annotations
 
 import json
+from dataclasses import replace
 from typing import Iterator, Sequence
 
 import datetime as _dt
@@ -68,9 +72,15 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from dump_es_parquet_spark.coerce_py import coerce_doc, flatten_doc
-from dump_es_parquet_spark.schema import mapping_response_to_struct
-from dump_es_parquet_spark.sources.client import iter_hits, with_retry
+from dump_es_parquet_spark.sources.scan import (
+    ScanOptions,
+    and_query,
+    coerce_hits,
+    effective_slices,
+    fetch_mapping,
+    fetch_schema,
+    iter_slice_hits,
+)
 
 
 def _make_client(options: dict):
@@ -168,15 +178,10 @@ class EsDumpDataSource(DataSource):
         return "esdump"
 
     def schema(self) -> StructType:
-        client = _make_client(self.options)
-        mapping = with_retry(
-            lambda: client.get_mapping(self.options["index"]), max_retries=3,
-            backoff_s=1.0,
-        )
-        return mapping_response_to_struct(
-            mapping,
-            flatten=self.options.get("flatten", "false") == "true",
-            multivalue=self.options.get("multivalue", "first"),
+        return fetch_schema(
+            _make_client(self.options),
+            self.options["index"],
+            ScanOptions.from_options(self.options),
         )
 
     #: ES types with exact-term query_string semantics — equality
@@ -228,11 +233,10 @@ class EsDumpDataSource(DataSource):
         )
 
     def reader(self, schema: StructType) -> "EsDumpReader":
-        client = _make_client(self.options)
-        mapping = with_retry(
-            lambda: client.get_mapping(self.options["index"]),
-            max_retries=3,
-            backoff_s=1.0,
+        mapping = fetch_mapping(
+            _make_client(self.options),
+            self.options["index"],
+            ScanOptions.from_options(self.options),
         )
         props = next(iter(mapping.values()))["mappings"].get("properties", {})
         # typed leaf fields only: object fields (bare "properties") are
@@ -269,6 +273,7 @@ class EsDumpReader(DataSourceReader):
     ):
         self.schema = schema
         self.options = options
+        self.scan = ScanOptions.from_options(options)
         # default: nothing pushable without mapping info
         self.pushable = pushable if pushable is not None else set()
         self.field_types = field_types if field_types is not None else {}
@@ -334,12 +339,12 @@ class EsDumpReader(DataSourceReader):
         but the excluded column comes back NULL — so a consumed
         ``_exists_:load`` (or ``load:3``) would return rows whose
         ``load`` column is NULL, contradicting the Spark predicate."""
-        pats = self.options.get("fields")
+        pats = self.scan.source_includes()
         if not pats:
             return True
         import fnmatch
 
-        return any(fnmatch.fnmatch(fld, p.strip()) for p in pats.split(","))
+        return any(fnmatch.fnmatch(fld, p) for p in pats)
 
     def _translate(self, f: "Filter") -> str | None:
         if isinstance(f, Not):
@@ -432,78 +437,23 @@ class EsDumpReader(DataSourceReader):
         return None
 
     def _query(self) -> str | None:
-        user = self.options.get("query")
-        clauses = ([user] if user else []) + self.pushed_clauses
-        if not clauses:
-            return None
-        if len(clauses) == 1:
-            return clauses[0]
-        # parenthesize each clause: Lucene binds AND tighter than OR,
-        # so an unparenthesized user query 'a:1 OR b:2' joined with a
-        # pushed 'c:3' would parse as 'a:1 OR (b:2 AND c:3)' — and the
-        # consumed pushdown filter is trusted, nothing re-checks rows
-        return " AND ".join(f"({c})" for c in clauses)
-
-    def _n_slices(self) -> int:
-        """Real ES rejects the ``slice`` parameter on a plain search
-        (slicing needs a PIT or scroll context), so ``search_after``
-        without PIT (``pit=false``, pre-7.10 servers) is forced
-        single-slice — otherwise N partitions would each scan the full
-        index."""
-        if (
-            self.options.get("cursor", "search_after") == "search_after"
-            and self.options.get("pit", "true") == "false"
-        ):
-            return 1
-        return max(1, int(self.options.get("slices", "8")))
+        # consumed pushdown filters are trusted, nothing re-checks the
+        # rows: they must reach the server AND-ed onto the user query
+        return and_query(self.scan.query, *self.pushed_clauses)
 
     def partitions(self) -> Sequence[InputPartition]:
-        return [InputPartition(i) for i in range(self._n_slices())]
+        return [InputPartition(i) for i in range(effective_slices(self.scan))]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        client = _make_client(self.options)
-        n = self._n_slices()
-        fields = self.options.get("fields")
-        flatten = self.options.get("flatten", "false") == "true"
-        multivalue = self.options.get("multivalue", "first")
-        spec = {"id": partition.value, "max": n} if n > 1 else None
-        common = dict(
-            q=self._query(),
-            _source=[f.strip() for f in fields.split(",")] if fields else None,
-            sort=self.options.get("sort"),
-            size=int(self.options.get("size", "500")),
-            slice_spec=spec,
-            max_retries=3,
-            backoff_s=1.0,
+        opts = replace(self.scan, query=self._query())
+        hits = iter_slice_hits(
+            _make_client(self.options),
+            self.options["index"],
+            opts,
+            partition.value,
+            effective_slices(opts),
         )
-        if self.options.get("cursor", "search_after") == "scroll":
-            # reference-parity option; the default is the
-            # retry-idempotent cursor (a retried Spark task re-runs its
-            # slice against a fresh PIT snapshot instead of a
-            # consumed-once scroll id) — see ScanOptions.cursor.
-            hits = iter_hits(
-                client,
-                self.options["index"],
-                scroll=self.options.get("scroll", "1h"),
-                **common,
-            )
-        else:
-            from dump_es_parquet_spark.sources.client import (
-                iter_hits_search_after,
-            )
-
-            hits = iter_hits_search_after(
-                client,
-                self.options["index"],
-                pit=self.options.get("pit", "true") != "false",
-                keep_alive=self.options.get("scroll", "1h"),
-                **common,
-            )
-        for hit in hits:
-            src = hit["_source"]
-            if flatten:
-                src = flatten_doc(src)
-            yield coerce_doc(src, self.schema, multivalue)
+        return coerce_hits(hits, self.schema, opts)
 
 
 def register(spark) -> None:

@@ -2,12 +2,12 @@
 
 The reference scans one sequential scroll per index
 (``dump-es-parquet:219-302``) — client parallelism 1. Here the scan is
-*sliced*: the index is split into N server-side slices (ES sliced
-scroll), one Spark task per slice, each task running its own
-scroll loop on an executor. That moves the reference's only
-thread/node boundary (HTTP round-trips) onto the cluster and is what
-makes a 100 TB dump feasible — N tasks × scroll batches instead of one
-cursor.
+*sliced*: the index is split into N server-side slices (sliced PIT
+or scroll), one Spark task per slice, each task running its own cursor
+loop (``iter_slice_hits``, shared with the ``esdump`` source) on an
+executor. That moves the reference's only thread/node boundary (HTTP
+round-trips) onto the cluster and is what makes a 100 TB dump
+feasible — N tasks × pages instead of one cursor.
 
 Pushdown parity (SURVEY.md ops #7-#10): ``query`` (Lucene
 query_string), ``fields`` (``_source`` includes, wildcards), ``sort``
@@ -31,8 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dump_es_parquet_spark.coerce import parse_and_coerce
+from dump_es_parquet_spark.coerce_py import coerce_doc, flatten_doc
 from dump_es_parquet_spark.schema import mapping_response_to_struct
-from dump_es_parquet_spark.sources.client import iter_hits, with_retry
+from dump_es_parquet_spark.sources.client import (
+    iter_hits,
+    iter_hits_search_after,
+    with_retry,
+)
 
 DEFAULT_SORT = "@timestamp:asc"  # reference default (dump-es-parquet:380)
 
@@ -65,6 +70,24 @@ class ScanOptions:
     def source_includes(self) -> list[str] | None:
         return [f.strip() for f in self.fields.split(",")] if self.fields else None
 
+    @classmethod
+    def from_options(cls, options: dict, sort: str | None = None) -> "ScanOptions":
+        """The ``esdump`` source's string options, parsed. Unset ones
+        keep the field defaults, except ``sort``, which defaults to ``sort``."""
+        d = cls()
+        return cls(
+            query=options.get("query"),
+            fields=options.get("fields"),
+            sort=options.get("sort", sort),
+            size=int(options.get("size", d.size)),
+            scroll=options.get("scroll", d.scroll),
+            cursor=options.get("cursor", d.cursor),
+            pit=options.get("pit", "true") != "false",
+            slices=int(options.get("slices", d.slices)),
+            flatten=options.get("flatten", "false") == "true",
+            multivalue=options.get("multivalue", d.multivalue),
+        )
+
 
 def effective_slices(opts: ScanOptions) -> int:
     """Real ES rejects the ``slice`` parameter on a plain search —
@@ -77,50 +100,69 @@ def effective_slices(opts: ScanOptions) -> int:
     return max(1, opts.slices)
 
 
+def and_query(*clauses: str | None) -> str | None:
+    """Lucene conjunction of the non-empty ``clauses``. With more than
+    one, each is parenthesized: Lucene binds AND tighter than OR, so an
+    unparenthesized user query 'a:1 OR b:2' joined with 'c:3' would
+    parse as 'a:1 OR (b:2 AND c:3)'."""
+    present = [c for c in clauses if c]
+    if len(present) <= 1:
+        return present[0] if present else None
+    return " AND ".join(f"({c})" for c in present)
+
+
+def iter_slice_hits(
+    client,
+    index: str,
+    opts: ScanOptions,
+    slice_id: int,
+    n_slices: int,
+    extra_query: str | None = None,
+) -> Iterator[dict]:
+    """Raw hits of slice ``slice_id`` of ``n_slices`` (from
+    ``effective_slices``) with ``opts`` pushed to the server as the
+    reference pushes them (``:219-238``); ``extra_query`` is AND-ed
+    onto ``opts.query``."""
+    common = dict(
+        q=and_query(opts.query, extra_query),
+        _source=opts.source_includes(),
+        sort=opts.sort,
+        size=opts.size,
+        slice_spec={"id": slice_id, "max": n_slices} if n_slices > 1 else None,
+        max_retries=opts.max_retries,
+        backoff_s=opts.backoff_s,
+    )
+    if opts.cursor == "scroll":
+        return iter_hits(client, index, scroll=opts.scroll, **common)
+    # the PIT's keep_alive is the same TTL knob as the scroll's
+    return iter_hits_search_after(
+        client, index, pit=opts.pit, keep_alive=opts.scroll, **common
+    )
+
+
+def coerce_hits(hits, schema, opts: ScanOptions) -> Iterator[tuple]:
+    """Rows of ``schema`` from raw hits, coerced in Python
+    (``coerce_py``) by the readers that build rows themselves."""
+    for hit in hits:
+        src = hit["_source"]
+        src = flatten_doc(src) if opts.flatten else src
+        yield coerce_doc(src, schema, opts.multivalue)
+
+
 def _slice_reader(
     client_factory: Callable[[], object],
     index: str,
     opts: ScanOptions,
     n_slices: int,
 ):
-    """Returns the per-partition function executed on executors: runs
-    one sliced scroll loop, emits raw ``_source`` JSON strings."""
+    """Returns the per-partition function executed on executors: reads
+    its slices, emits raw ``_source`` JSON strings."""
     import json
 
     def read_slices(slice_ids: Iterator[int]) -> Iterator[str]:
-        from dump_es_parquet_spark.sources.client import iter_hits_search_after
-
         client = client_factory()
         for sid in slice_ids:
-            spec = {"id": sid, "max": n_slices} if n_slices > 1 else None
-            if opts.cursor == "search_after":
-                hits = iter_hits_search_after(
-                    client,
-                    index,
-                    q=opts.query,
-                    _source=opts.source_includes(),
-                    sort=opts.sort,
-                    size=opts.size,
-                    slice_spec=spec,
-                    max_retries=opts.max_retries,
-                    backoff_s=opts.backoff_s,
-                    pit=opts.pit,
-                    keep_alive=opts.scroll,  # same TTL knob as scroll mode
-                )
-            else:
-                hits = iter_hits(
-                    client,
-                    index,
-                    q=opts.query,
-                    _source=opts.source_includes(),
-                    sort=opts.sort,
-                    size=opts.size,
-                    scroll=opts.scroll,
-                    slice_spec=spec,
-                    max_retries=opts.max_retries,
-                    backoff_s=opts.backoff_s,
-                )
-            for hit in hits:
+            for hit in iter_slice_hits(client, index, opts, sid, n_slices):
                 # only _source is read; ES metadata is discarded
                 # (reference :243, 247, 252)
                 yield json.dumps(hit["_source"])
@@ -139,14 +181,18 @@ def expand_pattern(client, pattern: str, opts: ScanOptions) -> list[str]:
     return sorted(settings.keys())
 
 
-def fetch_schema(client, index: str, opts: ScanOptions):
-    mapping = with_retry(
+def fetch_mapping(client, index: str, opts: ScanOptions) -> dict:
+    """The index's ``get_mapping`` response."""
+    return with_retry(
         lambda: client.get_mapping(index),
         max_retries=opts.max_retries,
         backoff_s=opts.backoff_s,
     )
+
+
+def fetch_schema(client, index: str, opts: ScanOptions):
     return mapping_response_to_struct(
-        mapping,
+        fetch_mapping(client, index, opts),
         flatten=opts.flatten,
         unhandled=opts.unhandled,
         multivalue=opts.multivalue,
@@ -166,7 +212,7 @@ def read_index_raw(
     IO is the one place RDD usage is warranted (SURVEY.md §7).
     """
     opts = opts or ScanOptions()
-    n = max(1, effective_slices(opts))
+    n = effective_slices(opts)
     rdd = spark.sparkContext.parallelize(range(n), n).mapPartitions(
         _slice_reader(client_factory, index, opts, n)
     )

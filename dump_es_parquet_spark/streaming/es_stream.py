@@ -9,29 +9,39 @@ cursor** — resumable, checkpointable, replayable (the same property
 that makes task retries safe in the batch scan makes exactly-once
 micro-batches possible here).
 
-Registered through the same ``esdump`` DataSource:
+Registered through the same ``esdump`` DataSource, with the batch
+source's options (parsed by ``ScanOptions.from_options``):
 
     spark.readStream.format("esdump")
-         .option("index", ...).option(...)  # same options as batch
+         .option("index", ...).option(...)
          .load()
 
 Two readers share the ``esdump`` format:
 
 - ``EsDumpStreamReader`` (default): ``SimpleDataSourceStreamReader``,
-  driver-side reads over a single search_after cursor. Correct for
-  moderate ingest rates; zero executor coordination.
+  driver-side reads over a single search_after cursor
+  (``client.iter_pages_search_after``, resumed from the offset; no
+  PIT, so new documents stay visible). Its ``sort`` defaults to
+  ``@timestamp:asc`` because the offset is the sort cursor; ``cursor``,
+  ``pit`` and ``slices`` do not apply. Correct for moderate ingest
+  rates; zero executor coordination.
 - ``EsDumpTimeSliceStreamReader`` (``stream_mode=timeslice``): a full
   ``DataSourceStreamReader`` whose offset is a **timestamp watermark**
-  and whose micro-batches fan out over N server-side slices read *on
-  executors* — the scale path for log-style indices (the reference's
-  domain is monitoring logs with ``@timestamp``). Each batch is the
-  half-open range ``(start_ts, end_ts]`` pushed down as a Lucene range
+  and whose micro-batches fan out over ``effective_slices`` server-side
+  slices read *on executors* by ``scan.iter_slice_hits`` — the batch
+  scan's slice reader, so ``cursor``/``pit`` apply as in batch — the
+  scale path for log-style indices (the reference's domain is
+  monitoring logs with ``@timestamp``). Each batch is the half-open
+  range ``(start_ts, end_ts]`` AND-ed onto ``query`` as a Lucene range
   clause, so replay of a committed batch is deterministic on an
   append-only index.
+
+Both readers coerce hits in Python with ``scan.coerce_hits``.
 """
 
 from __future__ import annotations
 
+import itertools
 from typing import Iterator, Sequence, Tuple
 
 from pyspark.sql.datasource import (
@@ -40,11 +50,13 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from dump_es_parquet_spark.coerce_py import coerce_doc, flatten_doc
-from dump_es_parquet_spark.sources.client import (
-    iter_hits,
-    with_retry,
-    with_sort_tiebreaker,
+from dump_es_parquet_spark.sources.client import iter_pages_search_after, with_retry
+from dump_es_parquet_spark.sources.scan import (
+    DEFAULT_SORT,
+    ScanOptions,
+    coerce_hits,
+    effective_slices,
+    iter_slice_hits,
 )
 
 
@@ -55,6 +67,8 @@ class EsDumpStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, schema, options: dict):
         self.schema = schema
         self.options = options
+        # the offset is the sort cursor, so a sort is always sent
+        self.scan = ScanOptions.from_options(options, sort=DEFAULT_SORT)
         self.pages_per_batch = int(options.get("pages_per_batch", "4"))
 
     def _client(self):
@@ -69,51 +83,31 @@ class EsDumpStreamReader(SimpleDataSourceStreamReader):
         return {"cursor": None}
 
     def _read_pages(
-        self, start_cursor, max_pages: int | None, stop_cursor=None
+        self, cursor, max_pages: int | None, stop_cursor=None
     ) -> Tuple[list, list]:
-        client = self._client()
+        """Rows of up to ``max_pages`` pages after ``cursor`` (all when
+        None), stopping early once ``stop_cursor`` is reached; returns
+        them with the cursor after the last page read."""
         rows: list[tuple] = []
-        cursor = start_cursor
-        flatten = self.options.get("flatten", "false") == "true"
-        multivalue = self.options.get("multivalue", "first")
-        pages = 0
-        while True:
+        if stop_cursor is not None and cursor == stop_cursor:
+            return rows, cursor
+        # no PIT: a live cursor must see documents indexed after it
+        # opened; the _id tie-breaker keeps page boundaries exact
+        pages = iter_pages_search_after(
+            self._client(),
+            self.options["index"],
+            q=self.scan.query,
+            _source=self.scan.source_includes(),
+            sort=self.scan.sort,
+            size=self.scan.size,
+            max_retries=self.scan.max_retries,
+            backoff_s=self.scan.backoff_s,
+            cursor=cursor,
+        )
+        for hits, cursor in itertools.islice(pages, max_pages):
+            rows.extend(coerce_hits(hits, self.schema, self.scan))
             if stop_cursor is not None and cursor == stop_cursor:
                 break
-            if max_pages is not None and pages >= max_pages:
-                break
-            cur = cursor
-            resp = with_retry(
-                lambda: client.search(
-                    self.options["index"],
-                    q=self.options.get("query"),
-                    _source=None,
-                    # unique tie-breaker: page boundaries must not skip
-                    # docs sharing the last sort value
-                    sort=with_sort_tiebreaker(
-                        self.options.get("sort", "@timestamp:asc"), pit=False
-                    ),
-                    size=int(self.options.get("size", "500")),
-                    scroll=None,
-                    search_after=cur,
-                ),
-                max_retries=3,
-                backoff_s=1.0,
-            )
-            hits = resp["hits"]["hits"]
-            if not hits:
-                break
-            for h in hits:
-                src = h["_source"]
-                if flatten:
-                    src = flatten_doc(src)
-                rows.append(coerce_doc(src, self.schema, multivalue))
-            nxt = resp.get("last_sort")
-            if nxt is None or nxt == cursor:
-                cursor = nxt if nxt is not None else cursor
-                break
-            cursor = nxt
-            pages += 1
         return rows, cursor
 
     def read(self, start: dict) -> Tuple[Iterator[Tuple], dict]:
@@ -138,7 +132,7 @@ class EsDumpTimeSliceStreamReader(DataSourceStreamReader):
     (one size-1 sorted search — O(1) driver work per trigger); each
     batch then reads ``ts ∈ (start, end]`` as a pushed-down Lucene
     range clause, split over ``slices`` server-side slices, one
-    executor task per slice (the same sliced-scroll scan as the batch
+    executor task per slice (the same slice reader as the batch
     source). Assumes an append-only index whose timestamp never
     decreases — the log-shipping shape the reference dumps
     (``dump-es-parquet:219-302`` always sorts ``@timestamp``); a doc
@@ -149,6 +143,7 @@ class EsDumpTimeSliceStreamReader(DataSourceStreamReader):
     def __init__(self, schema, options: dict):
         self.schema = schema
         self.options = options
+        self.scan = ScanOptions.from_options(options)
         self.ts_field = options.get("ts_field", "@timestamp")
 
     def _client(self):
@@ -181,14 +176,14 @@ class EsDumpTimeSliceStreamReader(DataSourceStreamReader):
         resp = with_retry(
             lambda: self._client().search(
                 self.options["index"],
-                q=self.options.get("query"),
+                q=self.scan.query,
                 _source=[self.ts_field],
                 sort=f"{self.ts_field}:desc",
                 size=1,
                 scroll=None,
             ),
-            max_retries=3,
-            backoff_s=1.0,
+            max_retries=self.scan.max_retries,
+            backoff_s=self.scan.backoff_s,
         )
         hits = resp["hits"]["hits"]
         if not hits:
@@ -215,7 +210,7 @@ class EsDumpTimeSliceStreamReader(DataSourceStreamReader):
         s, e = start.get("ts"), end.get("ts")
         if e is None or s == e:
             return [InputPartition((0, 1, s, e))]
-        n = max(1, int(self.options.get("slices", "8")))
+        n = effective_slices(self.scan)
         chunk = self._num(self.options.get("chunk_seconds"))
         s_n, e_n = self._num(s), self._num(e)
         if chunk and s_n is not None and e_n is not None and e_n > s_n:
@@ -236,31 +231,15 @@ class EsDumpTimeSliceStreamReader(DataSourceStreamReader):
         i, n, start, end = partition.value
         if end is None or start == end:
             return iter(())
-        user_q = self.options.get("query")
-        rng = self._range_clause(self.ts_field, start, end)
-        q = f"({user_q}) AND ({rng})" if user_q else rng
-        flatten = self.options.get("flatten", "false") == "true"
-        multivalue = self.options.get("multivalue", "first")
-
-        def rows() -> Iterator[Tuple]:
-            for hit in iter_hits(
-                self._client(),
-                self.options["index"],
-                q=q,
-                _source=None,
-                sort=self.options.get("sort"),
-                size=int(self.options.get("size", "500")),
-                scroll=self.options.get("scroll", "1h"),
-                slice_spec={"id": i, "max": n} if n > 1 else None,
-                max_retries=3,
-                backoff_s=1.0,
-            ):
-                src = hit["_source"]
-                if flatten:
-                    src = flatten_doc(src)
-                yield coerce_doc(src, self.schema, multivalue)
-
-        return rows()
+        hits = iter_slice_hits(
+            self._client(),
+            self.options["index"],
+            self.scan,
+            i,
+            n,
+            extra_query=self._range_clause(self.ts_field, start, end),
+        )
+        return coerce_hits(hits, self.schema, self.scan)
 
     def commit(self, end: dict) -> None:
         pass  # nothing server-side to release: ranges are stateless

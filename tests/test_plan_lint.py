@@ -119,7 +119,7 @@ def test_read_schema_width_counts_nested_types():
 #: gradual drift — a refactor that adds an avoidable Exchange or
 #: demotes a broadcast join to SMJ fails HERE with a diff instead of
 #: surfacing as an unexplained bench slowdown two rounds later.
-#: Values are the plan shape at sf0.001 / local[4] / 4 shuffle
+#: Values are the plan shape at sf0.001 / local[8] / 8 shuffle
 #: partitions (the conftest environment); a legitimate plan
 #: improvement updates the pin in the same commit that changes it.
 PINNED_FINGERPRINTS = {

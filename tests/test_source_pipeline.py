@@ -694,6 +694,51 @@ def test_search_after_first_page_not_skipped():
     assert [h["_source"]["n"] for h in hits] == list(range(10))
 
 
+def test_search_after_pages_resume_from_cursor():
+    """A page's cursor resumes the scan right after that page: the
+    pages read after resuming equal the rest of an uninterrupted
+    scan."""
+    from dump_es_parquet_spark.sources.client import iter_pages_search_after
+
+    fixture = {
+        "ties": {
+            "mapping": MAPPING,
+            "docs": [{"host": f"h{i}", "@timestamp": i // 4} for i in range(30)],
+        }
+    }
+
+    def pages(cursor=None):
+        return list(iter_pages_search_after(
+            MockES(fixture), "ties", q=None, _source=None,
+            sort="@timestamp:asc", size=7, backoff_s=0, cursor=cursor,
+        ))
+
+    full = pages()
+    assert [len(h) for h, _ in full] == [7, 7, 7, 7, 2]
+    assert full[-1][1] == full[-1][0][-1]["sort"]
+    resumed = pages(full[1][1])
+    assert [[h["_id"] for h in hits] for hits, _ in resumed] == [
+        [h["_id"] for h in hits] for hits, _ in full[2:]
+    ]
+
+
+def test_scan_options_from_esdump_options():
+    """The esdump string options parse to ScanOptions in one place;
+    unset options keep the field defaults except ``sort``."""
+    from dump_es_parquet_spark.sources.scan import DEFAULT_SORT
+
+    assert ScanOptions.from_options({}) == ScanOptions(sort=None)
+    assert ScanOptions.from_options({}, sort=DEFAULT_SORT) == ScanOptions()
+    assert ScanOptions.from_options(
+        {"query": "a:1", "fields": "a,b", "sort": "a:desc", "size": "9",
+         "scroll": "5m", "cursor": "scroll", "pit": "false", "slices": "3",
+         "flatten": "true", "multivalue": "array"}
+    ) == ScanOptions(
+        query="a:1", fields="a,b", sort="a:desc", size=9, scroll="5m",
+        cursor="scroll", pit=False, slices=3, flatten=True, multivalue="array",
+    )
+
+
 def test_search_after_ties_at_page_boundary():
     """Documents sharing the last sort value at a page boundary are
     not skipped: the automatic _id tie-breaker makes the cursor

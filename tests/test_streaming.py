@@ -184,6 +184,122 @@ def test_timeslice_reader_batches_partition_the_timeline():
     assert list(rdr.read(rdr.partitions(end, end)[0])) == []
 
 
+def _mock_index_opts(**extra):
+    import json
+
+    docs = [
+        {"n": i, "@timestamp": 100 + i // 4, "host": f"h{i % 3}"}
+        for i in range(60)
+    ]
+    mapping = {
+        "n": {"type": "integer"},
+        "@timestamp": {"type": "long"},
+        "host": {"type": "keyword"},
+    }
+    opts = {
+        "fixture_json": json.dumps({"ix": {"mapping": mapping, "docs": docs}}),
+        "index": "ix",
+        "slices": "3",
+        "size": "7",
+        **extra,
+    }
+    return opts, mapping
+
+
+def test_stream_readers_honor_fields():
+    """Both stream readers send the ``fields`` option as ``_source``
+    includes, like the batch reader: the excluded column comes back
+    NULL and every reader yields the same rows."""
+    from dump_es_parquet_spark.schema import properties_to_struct
+    from dump_es_parquet_spark.sources.datasource import EsDumpReader
+    from dump_es_parquet_spark.streaming.es_stream import (
+        EsDumpStreamReader,
+        EsDumpTimeSliceStreamReader,
+    )
+
+    opts, mapping = _mock_index_opts(fields="host,@timestamp")
+    schema = properties_to_struct(mapping)
+    n_pos = schema.names.index("n")
+
+    batch = EsDumpReader(schema, opts)
+    batch_rows = [r for p in batch.partitions() for r in batch.read(p)]
+
+    simple = EsDumpStreamReader(schema, opts)
+    simple_rows: list = []
+    offset = simple.initialOffset()
+    while True:
+        rows, offset = simple.read(offset)
+        rows = list(rows)
+        if not rows:
+            break
+        simple_rows += rows
+
+    ts = EsDumpTimeSliceStreamReader(schema, opts)
+    end = ts.latestOffset()
+    ts_rows = [
+        r for p in ts.partitions(ts.initialOffset(), end) for r in ts.read(p)
+    ]
+
+    assert len(batch_rows) == 60
+    for rows in (batch_rows, simple_rows, ts_rows):
+        assert all(r[n_pos] is None for r in rows)  # excluded by `fields`
+        assert sorted(rows) == sorted(batch_rows)
+
+
+def test_timeslice_reader_follows_cursor_and_pit():
+    """The timeslice reader uses the batch cursor: by default
+    search_after inside a PIT, never a scroll; and without a PIT it
+    reads one unsliced partition per time chunk instead of N full
+    scans."""
+    import json
+
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    from dump_es_parquet_spark.sources.client import MockES
+    from dump_es_parquet_spark.streaming.es_stream import (
+        EsDumpTimeSliceStreamReader,
+    )
+
+    opts, _ = _mock_index_opts()
+    schema = StructType(
+        [StructField("n", IntegerType()), StructField("@timestamp", LongType())]
+    )
+    calls: list = []
+
+    class Recorder:
+        def __init__(self, client):
+            self._client = client
+
+        def __getattr__(self, name):
+            fn = getattr(self._client, name)
+
+            def call(*args, **kwargs):
+                calls.append((name, kwargs))
+                return fn(*args, **kwargs)
+
+            return call
+
+    fixture = json.loads(opts["fixture_json"])
+    rdr = EsDumpTimeSliceStreamReader(schema, opts)
+    rdr._client = lambda: Recorder(MockES(fixture))
+    end = rdr.latestOffset()
+    calls.clear()
+    seen = [r[0] for p in rdr.partitions({"ts": None}, end) for r in rdr.read(p)]
+    assert sorted(seen) == list(range(60))
+    names = [name for name, _ in calls]
+    assert "scroll" not in names
+    assert names.count("open_pit") == 3  # one per slice
+    searches = [kw for name, kw in calls if name == "search"]
+    assert searches and all(kw["pit_id"] and not kw["scroll"] for kw in searches)
+
+    chunked, _ = _mock_index_opts(pit="false", slices="8", chunk_seconds="5")
+    rdr = EsDumpTimeSliceStreamReader(schema, chunked)
+    parts = rdr.partitions({"ts": 99}, {"ts": 114})
+    assert len(parts) == 3  # one per 5-second chunk, unsliced
+    seen = [r[0] for p in parts for r in rdr.read(p)]
+    assert sorted(seen) == list(range(60))
+
+
 def test_mockes_range_bounds():
     """Lucene range semantics in the mock: inclusive [..], exclusive
     {..}, and * unbounded — the evaluator the timeslice pushdown
@@ -470,6 +586,51 @@ def test_cli_follow_once(spark, tmp_path):
     # re-run: nothing new on the server — no duplicates appended
     assert main(argv) == 0
     assert spark.read.parquet(str(tmp_path / "flw")).count() == 250
+
+
+def test_cli_follow_once_forwards_scan_flags(spark, tmp_path):
+    """`--follow` passes the scan flags to the stream like the batch
+    dump does: with `--fields`, the excluded column is NULL."""
+    import json
+
+    from dump_es_parquet_spark.cli import main
+
+    docs = [{"n": i, "ts": 2000 + i, "kind": "k"} for i in range(250)]
+    fixture = {
+        "flf": {
+            "mapping": {
+                "n": {"type": "integer"},
+                "ts": {"type": "long"},
+                "kind": {"type": "keyword"},
+            },
+            "docs": docs,
+        }
+    }
+    fp = tmp_path / "fixture.json"
+    fp.write_text(json.dumps(fixture))
+    argv = [
+        "flf",
+        "--follow",
+        "--follow-once",
+        "--fixture-json",
+        str(fp),
+        "--out",
+        str(tmp_path),
+        "--ts-field",
+        "ts",
+        "--fields",
+        "n,ts",
+        "--sort",
+        "ts:asc",
+        "--slices",
+        "2",
+        "--quiet",
+    ]
+    assert main(argv) == 0
+    out = spark.read.parquet(str(tmp_path / "flf"))
+    assert out.count() == 250
+    assert out.select("n").distinct().count() == 250
+    assert out.filter("kind IS NOT NULL").count() == 0
 
 
 def test_cli_follow_once_with_dedup_key(spark, tmp_path):
