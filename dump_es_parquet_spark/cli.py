@@ -71,7 +71,9 @@ def build_parser() -> argparse.ArgumentParser:
                    help="engine extension: -v INFO, -vv DEBUG")
     # engine extensions
     p.add_argument("--out", default=".", help="output directory")
-    p.add_argument("--slices", type=int, default=8, help="scan parallelism")
+    p.add_argument("--slices", type=int, default=8,
+                   help="scan parallelism, an upper bound: a dump caps it "
+                   "at ceil(matching docs / --size) per index")
     p.add_argument("--multivalue", default="first", choices=["first", "array"])
     p.add_argument("--order", default="slice", choices=["slice", "global"])
     p.add_argument("--single-file", action="store_true",

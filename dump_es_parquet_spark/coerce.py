@@ -61,6 +61,13 @@ Strategy (wire columns, one parse per struct level):
      *counts* are exposed as observe() aggregates — see
      ``warning_aggregates``).
 
+Building and applying are separate steps (``build_coercion``,
+``Coercion.apply``): the Columns of steps 1-3 and of the warning
+aggregates depend only on the schema, the options and the input
+columns, so ``parse_and_coerce(cache=...)`` builds them once per
+distinct key and applies them to each frame — ``pipeline.dump`` builds
+once per mapping, not once per index.
+
 Unknown document fields are dropped implicitly (from_json ignores keys
 not in the schema — reference drops them with a counted warning,
 ``:115-119``; the count comes from each level's keys wire minus the
@@ -266,20 +273,17 @@ def _picked(scalar: Column, arrays: Column) -> Column:
     return F.when(arrays.isNotNull(), F.get(arrays, 0)).otherwise(scalar)
 
 
-def with_wires(
-    df: DataFrame, schema: T.StructType, value_col: str = "value"
-) -> tuple[DataFrame, Wires]:
-    """Append the wire columns of every struct level of ``schema`` to
-    ``df``: one ``select`` per nesting depth, each level's text parsed
-    exactly once (module docstring, step 1). The root level parses
-    ``value_col``; a nested level parses its field's collapsed text from
-    the parent level's wires. Wire names start with a prefix that no
-    column of ``df`` starts with, so no input column — nor a document
-    field literally called ``value`` — is ever shadowed."""
+def _wire_columns(
+    columns: list[str], schema: T.StructType, value_col: str
+) -> tuple[list[list[Column]], Wires]:
+    """The wire columns of every struct level of ``schema`` over a frame
+    with ``columns``, as one select list per nesting depth. Wire names
+    start with a prefix that no column starts with."""
     prefix = "_wire"
-    while any(c.startswith(prefix) for c in df.columns):
+    while any(c.startswith(prefix) for c in columns):
         prefix = "_" + prefix
     levels: dict[tuple[str, ...], tuple[str, str, str]] = {}
+    depths: list[list[Column]] = []
     depth = [((), schema, F.col(value_col))]
     while depth:
         cols, below = [], []
@@ -297,9 +301,29 @@ def with_wires(
                 for f in struct.fields
                 if isinstance(f.dataType, T.StructType)
             ]
-        df = df.select("*", *cols)
+        depths.append(cols)
         depth = below
-    return df, Wires(schema, levels)
+    return depths, Wires(schema, levels)
+
+
+def _select_wires(df: DataFrame, depths: list[list[Column]]) -> DataFrame:
+    for cols in depths:
+        df = df.select("*", *cols)
+    return df
+
+
+def with_wires(
+    df: DataFrame, schema: T.StructType, value_col: str = "value"
+) -> tuple[DataFrame, Wires]:
+    """Append the wire columns of every struct level of ``schema`` to
+    ``df``: one ``select`` per nesting depth, each level's text parsed
+    exactly once (module docstring, step 1). The root level parses
+    ``value_col``; a nested level parses its field's collapsed text from
+    the parent level's wires. Wire names start with a prefix that no
+    column of ``df`` starts with, so no input column — nor a document
+    field literally called ``value`` — is ever shadowed."""
+    depths, wires = _wire_columns(df.columns, schema, value_col)
+    return _select_wires(df, depths), wires
 
 
 # ---------------------------------------------------------------------------
@@ -368,6 +392,52 @@ def _flatten_columns(
     return out
 
 
+@dataclass(frozen=True, eq=False)
+class Coercion:
+    """The Columns ``parse_and_coerce`` applies: the wire selects (one
+    list per nesting depth), the typed projection and, on first use,
+    the warning aggregates. They depend only on the schema, the options
+    and the input frame's column names — never on its data — so one
+    ``Coercion`` serves every frame with those columns. It holds JVM
+    references: keep it no longer than its session."""
+
+    depths: list[list[Column]]
+    wires: Wires
+    projection: list[Column]
+
+    @cached_property
+    def observed(self) -> list[Column]:
+        return [c.alias(n) for n, c in warning_aggregates(self.wires).items()]
+
+    def apply(self, df: DataFrame, observation: Observation | None = None) -> DataFrame:
+        wired = _select_wires(df, self.depths)
+        if observation is not None:
+            wired = wired.observe(observation, *self.observed)
+        return wired.select(*self.projection)
+
+
+def build_coercion(
+    columns: list[str],
+    schema: T.StructType,
+    *,
+    value_col: str = "value",
+    flatten: bool = False,
+    multivalue: str = "first",
+    keep_raw: bool = False,
+) -> Coercion:
+    """Build the ``Coercion`` of ``schema`` for frames with ``columns``
+    (``parse_and_coerce``'s arguments)."""
+    depths, wires = _wire_columns(columns, schema, value_col)
+    cols = _coerce_struct(wires, (), schema, multivalue)
+    if flatten:
+        projected = _flatten_columns(cols, schema)
+    else:
+        projected = [c.alias(n) for n, c in cols]
+    if keep_raw:
+        projected = projected + [F.col(value_col).alias("_raw")]
+    return Coercion(depths, wires, projected)
+
+
 def parse_and_coerce(
     df: DataFrame,
     schema: T.StructType,
@@ -377,6 +447,7 @@ def parse_and_coerce(
     multivalue: str = "first",
     keep_raw: bool = False,
     observation: Observation | None = None,
+    cache: dict | None = None,
 ) -> DataFrame:
     """Raw-JSON DataFrame (one ``_source`` doc per row in ``value_col``)
     → typed DataFrame matching ``schema``.
@@ -390,19 +461,28 @@ def parse_and_coerce(
     between the parse and the typed projection, so the warning report
     reads the same parsed columns and rides the first action on the
     returned frame (no second pass over the data).
+
+    ``cache``, a dict the caller owns, keeps each ``Coercion`` built
+    through it: a later call with the same schema, options and input
+    columns applies the built Columns instead of building them again
+    (``pipeline.dump`` passes one per dump, so same-mapping indices
+    build once). The caller decides its lifetime, which must end with
+    the session.
     """
-    wired, wires = with_wires(df, schema, value_col)
-    if observation is not None:
-        aggs = warning_aggregates(wires)
-        wired = wired.observe(observation, *[c.alias(n) for n, c in aggs.items()])
-    cols = _coerce_struct(wires, (), schema, multivalue)
-    if flatten:
-        projected = _flatten_columns(cols, schema)
-    else:
-        projected = [c.alias(n) for n, c in cols]
-    if keep_raw:
-        projected = projected + [F.col(value_col).alias("_raw")]
-    return wired.select(*projected)
+    key = (schema.json(), tuple(df.columns), value_col, flatten, multivalue, keep_raw)
+    coercion = cache.get(key) if cache is not None else None
+    if coercion is None:
+        coercion = build_coercion(
+            df.columns,
+            schema,
+            value_col=value_col,
+            flatten=flatten,
+            multivalue=multivalue,
+            keep_raw=keep_raw,
+        )
+        if cache is not None:
+            cache[key] = coercion
+    return coercion.apply(df, observation)
 
 
 # ---------------------------------------------------------------------------

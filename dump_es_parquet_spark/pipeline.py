@@ -5,6 +5,14 @@ This is the reference's ``Processor.process`` / ``process_index``
 orchestration (``dump-es-parquet:87-95, 214-310``) over the Spark
 building blocks. Each index is one Spark job; an exception in one
 index is logged and the loop continues (``:87-95``).
+
+Per index, the driver sends one probe (``scan.probe_index``, an
+unsorted first page): its ``hits.total`` caps the scan's slices at
+⌈total ÷ size⌉ and its docs size the output files. The coercion
+Columns are built once per distinct mapping per ``dump`` call and
+applied to each index's raw frame with that index's own
+``Observation``, so same-mapping index patterns like ``logs-*`` pay
+the construction once.
 """
 
 from __future__ import annotations
@@ -27,6 +35,7 @@ from dump_es_parquet_spark.sources.scan import (
     ScanOptions,
     expand_pattern,
     fetch_schema,
+    probe_index,
     read_index_raw,
     _sort_columns,
 )
@@ -58,27 +67,6 @@ class DumpResult:
         return lines
 
 
-def _sample_rows_per_file(
-    client, idx: str, scan: ScanOptions, sink: SinkOptions
-) -> int | None:
-    """maxRecordsPerFile for one index from a single driver-side page
-    fetch (no scroll context, no Spark job): raw ``_source`` JSON size
-    approximates the written row width closely enough for the MB bound
-    — and keeps each index's distributed scan single-pass."""
-    if not sink.partition or sink.output == "stdout":
-        return None
-    resp = client.search(
-        idx,
-        q=scan.query,
-        _source=scan.source_includes(),
-        sort=None,
-        size=min(1000, scan.size),
-        scroll=None,
-    )
-    docs = [h.get("_source", {}) for h in resp.get("hits", {}).get("hits", [])]
-    return bounded_rows_per_file(estimate_row_bytes_from_docs(docs), sink)
-
-
 def dump(
     spark: SparkSession,
     client_factory,
@@ -107,6 +95,10 @@ def dump(
     result = DumpResult()
 
     indices = expand_pattern(client_factory(), index_pattern, scan)
+    # the built coercion Columns of each distinct mapping, reused by the
+    # indices that share it; local to this call, as Columns hold JVM
+    # references that must not outlive the session
+    coercions: dict = {}
     for idx in indices:
         try:
             logger.log(UBER, "Processing index %s", idx)
@@ -119,8 +111,11 @@ def dump(
                 from dataclasses import replace
 
                 eff_scan = replace(scan, slices=1)
-            raw = read_index_raw(spark, client_factory, idx, eff_scan)
-            rpf = _sample_rows_per_file(client_factory(), idx, scan, sink)
+            # one driver-side page (no Spark job): its hits.total sizes
+            # the scan's slices, its docs the output files
+            sample, total = probe_index(client_factory(), idx, scan)
+            raw = read_index_raw(spark, client_factory, idx, eff_scan, total)
+            rpf = bounded_rows_per_file(estimate_row_bytes_from_docs(sample), sink)
             if build_df:
                 schema = fetch_schema(client_factory(), idx, scan)
                 # one-pass warning observation riding the write job,
@@ -129,7 +124,7 @@ def dump(
                 # The write action must be the FIRST action on this
                 # plan — any earlier action (e.g. a sampling count)
                 # would satisfy Observation.get with truncated-sample
-                # numbers — hence the driver-side rpf sample above.
+                # numbers — hence the driver-side probe above.
                 obs = Observation(f"warnings-{idx}")
                 df = parse_and_coerce(
                     raw,
@@ -137,6 +132,7 @@ def dump(
                     flatten=scan.flatten,
                     multivalue=scan.multivalue,
                     observation=obs,
+                    cache=coercions,
                 )
                 if scan.order == "global" and scan.sort:
                     df = df.orderBy(*_sort_columns(scan.sort, df.columns))

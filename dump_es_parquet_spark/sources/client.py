@@ -414,7 +414,7 @@ class MockES:
             ]
         total = len(hits)
         page, rest = hits[:size], hits[size:]
-        resp = {"hits": {"total": {"value": total}, "hits": page}}
+        resp = {"hits": {"total": {"value": total, "relation": "eq"}, "hits": page}}
         if scroll:
             sid = f"scroll-{index}-{id(rest)}-{len(rest)}"
             self._scrolls[sid] = (rest, size)

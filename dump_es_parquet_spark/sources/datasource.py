@@ -16,7 +16,9 @@ Options:
   ``ScanOptions.from_options`` parses (``sort`` unset by default)
 
 Each partition is one slice read by ``scan.iter_slice_hits``, the batch
-scan's slice reader, with the pushed clauses AND-ed onto ``query``.
+scan's slice reader, with the pushed clauses AND-ed onto ``query``; it
+carries ``(slice_id, n_slices)``, so a reader addresses exactly the
+slices ``partitions()`` planned.
 Rows are coerced *in the reader* with the pure-Python twin of the
 expression coercion (``scan.coerce_hits``) — the data is already
 Python dicts from the HTTP JSON, so this is the natural (and single)
@@ -442,16 +444,16 @@ class EsDumpReader(DataSourceReader):
         return and_query(self.scan.query, *self.pushed_clauses)
 
     def partitions(self) -> Sequence[InputPartition]:
-        return [InputPartition(i) for i in range(effective_slices(self.scan))]
+        # each partition carries its slice count: read() must address
+        # slice i of the SAME n, or slices are silently lost or doubled
+        n = effective_slices(self.scan)
+        return [InputPartition((i, n)) for i in range(n)]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
+        slice_id, n_slices = partition.value
         opts = replace(self.scan, query=self._query())
         hits = iter_slice_hits(
-            _make_client(self.options),
-            self.options["index"],
-            opts,
-            partition.value,
-            effective_slices(opts),
+            _make_client(self.options), self.options["index"], opts, slice_id, n_slices
         )
         return coerce_hits(hits, self.schema, opts)
 

@@ -9,6 +9,13 @@ executor. That moves the reference's only thread/node boundary (HTTP
 round-trips) onto the cluster and is what makes a 100 TB dump
 feasible — N tasks × pages instead of one cursor.
 
+``slices`` is an upper bound. ``pipeline.dump`` sends one driver-side
+probe per index (``probe_index``): the unsorted first page the sink
+sizes its files from, whose ``hits.total`` caps the slice count at
+⌈total ÷ size⌉ (``effective_slices``). A 300-doc index is read as one
+slice — one PIT, one task, one output file — while a large index keeps
+every slice.
+
 Pushdown parity (SURVEY.md ops #7-#10): ``query`` (Lucene
 query_string), ``fields`` (``_source`` includes, wildcards), ``sort``
 (``field:dir`` pairs, default ``@timestamp:asc``) and ``size`` (scroll
@@ -89,15 +96,40 @@ class ScanOptions:
         )
 
 
-def effective_slices(opts: ScanOptions) -> int:
-    """Real ES rejects the ``slice`` parameter on a plain search —
-    slicing needs a PIT or scroll context. ``search_after`` without PIT
-    (``--no-pit``, pre-7.10 servers) therefore runs single-slice; every
-    partition-count decision goes through here so N unsliced scans can
-    never each read the whole index."""
+def effective_slices(opts: ScanOptions, total: int | dict | None = None) -> int:
+    """The slice count of a scan; every partition-count decision goes
+    through here.
+
+    Real ES rejects the ``slice`` parameter on a plain search — slicing
+    needs a PIT or scroll context. ``search_after`` without PIT
+    (``--no-pit``, pre-7.10 servers) therefore runs single-slice, so N
+    unsliced scans can never each read the whole index.
+
+    ``total`` is a search response's ``hits.total`` for the scan's
+    query (``probe_index``). When it is exact — an ES6 integer, or
+    relation ``eq`` — ``opts.slices`` is capped at ⌈total ÷ size⌉: a
+    slice that cannot fill one page costs a PIT, a task and an output
+    file while reading next to nothing. A ``gte`` lower bound, or no
+    total, leaves ``opts.slices`` as it is; the cap only ever lowers
+    the count."""
     if opts.cursor == "search_after" and not opts.pit:
         return 1
-    return max(1, opts.slices)
+    n = max(1, opts.slices)
+    exact = _exact_total(total)
+    if exact is not None:
+        n = min(n, max(1, -(-exact // max(1, opts.size))))
+    return n
+
+
+def _exact_total(total: int | dict | None) -> int | None:
+    """The hit count ``hits.total`` states exactly, else None: ES6
+    sends an integer, ES7+/OpenSearch ``{"value", "relation"}`` where
+    ``gte`` marks a lower bound (``track_total_hits``)."""
+    if isinstance(total, int) and not isinstance(total, bool):
+        return total
+    if isinstance(total, dict) and total.get("relation") == "eq":
+        return int(total["value"])
+    return None
 
 
 def and_query(*clauses: str | None) -> str | None:
@@ -170,6 +202,28 @@ def _slice_reader(
     return read_slices
 
 
+def probe_index(client, index: str, opts: ScanOptions) -> tuple[list[dict], int | dict | None]:
+    """One driver-side search of ``index`` under ``opts.query`` before
+    its scan: an unsorted first page, no cursor, no PIT, no Spark job.
+    Returns the page's ``_source`` docs (a row-width sample for the
+    sink's file bound) and the response's ``hits.total`` (for
+    ``effective_slices``)."""
+    resp = with_retry(
+        lambda: client.search(
+            index,
+            q=opts.query,
+            _source=opts.source_includes(),
+            sort=None,
+            size=min(1000, opts.size),
+            scroll=None,
+        ),
+        max_retries=opts.max_retries,
+        backoff_s=opts.backoff_s,
+    )
+    hits = resp.get("hits", {})
+    return [h.get("_source", {}) for h in hits.get("hits", [])], hits.get("total")
+
+
 def expand_pattern(client, pattern: str, opts: ScanOptions) -> list[str]:
     """Index pattern → concrete names (reference get_indices,
     ``:341-350``)."""
@@ -204,15 +258,18 @@ def read_index_raw(
     client_factory: Callable[[], object],
     index: str,
     opts: ScanOptions | None = None,
+    total: int | dict | None = None,
 ) -> DataFrame:
     """Schemaless scan → ``DataFrame[value: string]`` of raw ``_source``
     JSON (the reference's ``build_df=False`` raw path, ``:244-253``).
 
     One Spark partition per server-side slice; per-partition imperative
     IO is the one place RDD usage is warranted (SURVEY.md §7).
+    ``total``, the index's ``hits.total`` from ``probe_index``, caps
+    the slice count (``effective_slices``).
     """
     opts = opts or ScanOptions()
-    n = effective_slices(opts)
+    n = effective_slices(opts, total)
     rdd = spark.sparkContext.parallelize(range(n), n).mapPartitions(
         _slice_reader(client_factory, index, opts, n)
     )

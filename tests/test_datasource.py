@@ -388,6 +388,55 @@ def test_no_pit_forces_single_slice(spark):
     assert df.count() == len(DOCS_MILLIS)  # no N-times duplication
 
 
+def test_effective_slices_capped_by_exact_total():
+    """An exact ``hits.total`` caps the slice count at ⌈total ÷ size⌉;
+    a ``gte`` lower bound or a missing total leaves ``slices``; without
+    a PIT the scan stays single-slice whatever the total."""
+    from dump_es_parquet_spark.sources.scan import ScanOptions, effective_slices
+
+    opts = ScanOptions()  # slices=8, size=500
+    eq = lambda n: {"value": n, "relation": "eq"}  # noqa: E731
+    assert effective_slices(opts, eq(0)) == 1
+    assert effective_slices(opts, eq(300)) == 1
+    assert effective_slices(opts, eq(1500)) == 3
+    assert effective_slices(opts, eq(10_000)) == 8
+    assert effective_slices(opts, 1500) == 3  # ES6: a plain integer
+    assert effective_slices(opts, {"value": 10_000, "relation": "gte"}) == 8
+    assert effective_slices(opts, {"value": 300, "relation": "gte"}) == 8
+    assert effective_slices(opts) == 8
+    for total in (eq(0), eq(10_000), None):
+        assert effective_slices(ScanOptions(pit=False), total) == 1
+    assert effective_slices(ScanOptions(cursor="scroll"), eq(1500)) == 3
+
+
+def test_esdump_reads_address_the_planned_slice_count(monkeypatch):
+    """Every partition carries its slice count: each slice spec the
+    reader sends has ``max == len(partitions())``, and the slices
+    together return every document exactly once."""
+    from dump_es_parquet_spark.sources import datasource
+    from dump_es_parquet_spark.sources.client import MockES
+
+    sent: list = []
+
+    class Recorder(MockES):
+        def search(self, index, **kw):
+            sent.append(kw.get("slice_spec"))
+            return super().search(index, **kw)
+
+    monkeypatch.setattr(
+        datasource, "_make_client", lambda o: Recorder(json.loads(o["fixture_json"]))
+    )
+    schema = properties_to_struct(MAPPING)
+    reader = EsDumpReader(schema, {"fixture_json": FIXTURE_JSON, "index": "logs", "slices": "3"})
+    parts = reader.partitions()
+    rows = [r for p in parts for r in reader.read(p)]
+    assert len(parts) == 3
+    assert sent and all(spec["max"] == len(parts) for spec in sent)
+    assert {spec["id"] for spec in sent} == {0, 1, 2}
+    load = schema.names.index("load")  # unique per document
+    assert sorted(r[load] for r in rows) == sorted(d["load"] for d in DOCS)
+
+
 def test_negation_pushdown_results(esdump_millis):
     """NOT-equality evaluated server-side matches Spark's null-aware
     semantics: docs with host=NULL are excluded by both engines."""

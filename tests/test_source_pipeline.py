@@ -936,3 +936,142 @@ def test_cli_attributes_path_collision_suffixes(spark, tmp_path):
     attrs = spark.read.parquet(str(tmp_path / "corpus_attributes_"))
     assert attrs.count() == 10
     assert "n_tokens" in attrs.columns
+
+
+# ---------------------------------------------------------------------------
+# per-index fixed cost: slice sizing and coercion reuse
+# ---------------------------------------------------------------------------
+
+
+def _logged_es(fixture: dict, log_path: str):
+    """A MockES factory whose clients append each call (name, slice
+    spec) to ``log_path`` — from the driver and the Python workers."""
+
+    class Logged:
+        def __init__(self):
+            self._es = MockES(fixture)
+
+        def __getattr__(self, name):
+            fn = getattr(self._es, name)
+
+            def call(*args, **kwargs):
+                with open(log_path, "a") as fh:
+                    fh.write(json.dumps([name, kwargs.get("slice_spec")]) + "\n")
+                return fn(*args, **kwargs)
+
+            return call
+
+    return Logged
+
+
+def _calls(log_path) -> list:
+    with open(log_path) as fh:
+        return [json.loads(line) for line in fh]
+
+
+def test_dump_small_index_reads_one_slice(spark, tmp_path):
+    """Default options on a 300-doc index: the probe's exact total caps
+    the 8 slices at one — one PIT, no slice spec, one part file."""
+    log = str(tmp_path / "calls.jsonl")
+    fixture = {"small": {"mapping": MAPPING, "docs": make_fixture(300)["metrics-2026.05"]["docs"]}}
+    res = dump(spark, _logged_es(fixture, log), "small", str(tmp_path / "out"))
+    assert not res.errors
+    calls = _calls(log)
+    assert [c for c, _ in calls].count("open_pit") == 1
+    assert all(spec is None for c, spec in calls if c == "search")
+    files = glob.glob(str(tmp_path / "out" / "small" / "part-*.parquet"))
+    assert len(files) == 1
+    assert spark.read.parquet(*files).count() == 300
+
+
+def test_dump_multi_slice_reads_every_doc_once(spark, tmp_path):
+    """1,500 docs at size 200 keep all 8 slices: 8 PITs, every slice
+    spec says ``max == 8``, and each document is written exactly once."""
+    log = str(tmp_path / "calls.jsonl")
+    docs = [dict(d, port=i) for i, d in enumerate(make_fixture(1500)["metrics-2026.05"]["docs"])]
+    fixture = {"big": {"mapping": MAPPING, "docs": docs}}
+    res = dump(
+        spark, _logged_es(fixture, log), "big", str(tmp_path / "out"), ScanOptions(size=200)
+    )
+    assert not res.errors
+    calls = _calls(log)
+    assert [c for c, _ in calls].count("open_pit") == 8
+    specs = [spec for c, spec in calls if c == "search" and spec is not None]
+    assert {s["max"] for s in specs} == {8}
+    assert {s["id"] for s in specs} == set(range(8))
+    ports = [r.port for r in spark.read.parquet(str(tmp_path / "out" / "big")).collect()]
+    assert sorted(ports) == list(range(1500))
+
+
+def test_cli_no_pit_warning_is_not_the_size_cap(tmp_path, capsys):
+    """The ``--no-pit`` single-slice warning fires for ``--no-pit``
+    only: a default dump whose small index the size cap reads as one
+    slice prints no warning."""
+    from dump_es_parquet_spark.cli import main
+
+    fp = tmp_path / "fixture.json"
+    fp.write_text(json.dumps({"small": FIXTURE["unrelated-index"]}))
+    args = ["small", "--fixture-json", str(fp), "--quiet"]
+    assert main(args + ["--out", str(tmp_path / "a")]) == 0
+    assert "--no-pit" not in capsys.readouterr().err
+    assert main(args + ["--out", str(tmp_path / "b"), "--no-pit"]) == 0
+    assert "--no-pit disables sliced scans" in capsys.readouterr().err
+
+
+def _dirty_fixture() -> dict:
+    """Two same-mapping indices with different dirty documents."""
+    return {
+        "dirty-a": {"mapping": MAPPING, "docs": [
+            {"host": "a", "port": "x"},
+            {"host": "b", "port": "y", "extra": 1},
+            {"host": "c", "port": 1},
+        ]},
+        "dirty-b": {"mapping": MAPPING, "docs": [
+            {"host": ["x", "y"], "port": 2},
+            {"host": "d", "load": "heavy"},
+        ]},
+    }
+
+
+def test_dump_same_mapping_indices_keep_their_own_warnings(spark, tmp_path):
+    """Indices sharing one built coercion still observe only their own
+    rows: each index's warnings are its own counts, neither summed nor
+    shared."""
+    fixture = _dirty_fixture()
+    res = dump(spark, lambda: MockES(fixture), "dirty-*", str(tmp_path))
+    assert not res.errors
+
+    def nonzero(counts):
+        return {k: v for k, v in counts.items() if v}
+
+    assert nonzero(res.warnings["dirty-a"]) == {
+        "docs": 3, "port_cast_failures": 2, "unknown_field_values": 1,
+    }
+    assert nonzero(res.warnings["dirty-b"]) == {
+        "docs": 2, "multivalue_collapsed": 1, "load_cast_failures": 1,
+    }
+
+
+def test_dump_builds_coercion_once_per_mapping(spark, tmp_path, monkeypatch):
+    """One ``dump`` builds the coercion once per distinct mapping, and
+    no build outlives its ``dump`` call."""
+    from dump_es_parquet_spark import coerce
+
+    builds: list = []
+    real = coerce.build_coercion
+
+    def counting(*args, **kwargs):
+        builds.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(coerce, "build_coercion", counting)
+    docs = FIXTURE["unrelated-index"]["docs"]
+    fixture = {f"same-{i}": {"mapping": MAPPING, "docs": docs} for i in range(3)}
+    fixture["other"] = {"mapping": {"n": {"type": "integer"}}, "docs": [{"n": 1}]}
+    res = dump(spark, lambda: MockES(fixture), "same-*", str(tmp_path / "a"))
+    assert not res.errors and len(res.indices) == 3
+    assert len(builds) == 1
+    builds.clear()
+    res = dump(spark, lambda: MockES(fixture), "*", str(tmp_path / "b"))
+    assert not res.errors and len(res.indices) == 4
+    assert len(builds) == 2
