@@ -7,23 +7,22 @@ building blocks. Each index is one Spark job; an exception in one
 index is logged and the loop continues (``:87-95``).
 
 Per index, the driver sends one probe (``scan.probe_index``, an
-unsorted first page): its ``hits.total`` caps the scan's slices at
-⌈total ÷ size⌉ and its docs size the output files. The coercion
-Columns are built once per distinct mapping per ``dump`` call and
-applied to each index's raw frame with that index's own
-``Observation``, so same-mapping index patterns like ``logs-*`` pay
-the construction once.
+unsorted first page): its docs size the output files and its
+``hits.total`` caps the scan's slices at ⌈total ÷ size⌉. The typed
+modes read through ``scan.read_index`` — the same per-index read as
+``read_pattern`` — handing it that probe, the index's own
+``Observation`` and one coercion cache per ``dump`` call, so
+same-mapping index patterns like ``logs-*`` pay the construction once.
 """
 
 from __future__ import annotations
 
 import logging
 import traceback
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Observation, SparkSession
 
-from dump_es_parquet_spark.coerce import parse_and_coerce
 from dump_es_parquet_spark.sinks import (
     SinkOptions,
     bounded_rows_per_file,
@@ -34,10 +33,9 @@ from dump_es_parquet_spark.sinks import (
 from dump_es_parquet_spark.sources.scan import (
     ScanOptions,
     expand_pattern,
-    fetch_schema,
     probe_index,
+    read_index,
     read_index_raw,
-    _sort_columns,
 )
 
 logger = logging.getLogger(__name__)
@@ -102,22 +100,11 @@ def dump(
     for idx in indices:
         try:
             logger.log(UBER, "Processing index %s", idx)
-            eff_scan = scan
-            if scan.order == "global" and not build_df:
-                # raw modes can't re-sort a [value: string] frame by
-                # typed fields; global order is produced the way the
-                # reference produces it — one sequential sorted scan
-                # (dump-es-parquet:226,380)
-                from dataclasses import replace
-
-                eff_scan = replace(scan, slices=1)
-            # one driver-side page (no Spark job): its hits.total sizes
-            # the scan's slices, its docs the output files
-            sample, total = probe_index(client_factory(), idx, scan)
-            raw = read_index_raw(spark, client_factory, idx, eff_scan, total)
+            # one driver-side page (no Spark job): its docs size the
+            # output files, its hits.total the scan's slices
+            sample, total = probe = probe_index(client_factory(), idx, scan)
             rpf = bounded_rows_per_file(estimate_row_bytes_from_docs(sample), sink)
             if build_df:
-                schema = fetch_schema(client_factory(), idx, scan)
                 # one-pass warning observation riding the write job,
                 # observed on the parsed wire columns the typed
                 # projection reads (raw → wires → observe → typed).
@@ -126,16 +113,10 @@ def dump(
                 # would satisfy Observation.get with truncated-sample
                 # numbers — hence the driver-side probe above.
                 obs = Observation(f"warnings-{idx}")
-                df = parse_and_coerce(
-                    raw,
-                    schema,
-                    flatten=scan.flatten,
-                    multivalue=scan.multivalue,
-                    observation=obs,
-                    cache=coercions,
+                df = read_index(
+                    spark, client_factory, idx, scan,
+                    probe=probe, observation=obs, cache=coercions,
                 )
-                if scan.order == "global" and scan.sort:
-                    df = df.orderBy(*_sort_columns(scan.sort, df.columns))
                 result.indices[idx] = write(
                     df, output_path, idx, sink, rows_per_file_hint=rpf
                 )
@@ -147,17 +128,23 @@ def dump(
                         spark, str(result.indices[idx]), output_path, idx,
                         sink, attributes, all_indices=set(indices),
                     )
-            elif sink.output == "stdout":
-                result.indices[idx] = write_stdout(raw)
-            else:  # jsonl raw
-                result.indices[idx] = write(
-                    raw, output_path, idx, sink, rows_per_file_hint=rpf
-                )
+            else:
+                # raw modes can't re-sort a [value: string] frame by
+                # typed fields; global order is produced the way the
+                # reference produces it — one sequential sorted scan
+                # (dump-es-parquet:226,380)
+                raw_scan = replace(scan, slices=1) if scan.order == "global" else scan
+                raw = read_index_raw(spark, client_factory, idx, raw_scan, total)
+                if sink.output == "stdout":
+                    result.indices[idx] = write_stdout(raw)
+                else:  # jsonl raw
+                    result.indices[idx] = write(
+                        raw, output_path, idx, sink, rows_per_file_hint=rpf
+                    )
         except Exception as e:  # per-index isolation (reference :87-95)
             logger.error("Exception while processing index %s", idx)
             traceback.print_exc()
             result.errors[idx] = str(e)
-            continue
 
     for line in result.warning_report():
         logger.warning(line)

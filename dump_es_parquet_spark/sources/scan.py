@@ -9,12 +9,15 @@ executor. That moves the reference's only thread/node boundary (HTTP
 round-trips) onto the cluster and is what makes a 100 TB dump
 feasible — N tasks × pages instead of one cursor.
 
-``slices`` is an upper bound. ``pipeline.dump`` sends one driver-side
-probe per index (``probe_index``): the unsorted first page the sink
-sizes its files from, whose ``hits.total`` caps the slice count at
-⌈total ÷ size⌉ (``effective_slices``). A 300-doc index is read as one
-slice — one PIT, one task, one output file — while a large index keeps
-every slice.
+``slices`` is an upper bound. Every typed read (``read_index``, and so
+``read_pattern`` and ``pipeline.dump``) sends one driver-side probe per
+index (``probe_index``): an unsorted first page whose ``hits.total``
+caps the slice count at ⌈total ÷ size⌉ (``effective_slices``), and
+whose docs ``pipeline.dump`` sizes its files from. A 300-doc index is
+read as one slice — one PIT, one task, one output file — while a large
+index keeps every slice. ``read_index`` is the one typed per-index
+read: probe, schema, scan, coercion (built once per mapping through the
+caller's cache) and sort.
 
 Pushdown parity (SURVEY.md ops #7-#10): ``query`` (Lucene
 query_string), ``fields`` (``_source`` includes, wildcards), ``sort``
@@ -34,7 +37,7 @@ from __future__ import annotations
 from dataclasses import dataclass, replace
 from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dump_es_parquet_spark.coerce import parse_and_coerce
@@ -69,7 +72,6 @@ class ScanOptions:
     slices: int = 8  # engine extension: scan parallelism
     flatten: bool = False  # --flatten (:388-390)
     multivalue: str = "first"  # 'first' (reference) | 'array'
-    unhandled: str = "string"  # unhandled-mapping-type policy
     order: str = "slice"  # 'slice' | 'global'
     max_retries: int | None = 3
     backoff_s: float = 1.0
@@ -248,7 +250,6 @@ def fetch_schema(client, index: str, opts: ScanOptions):
     return mapping_response_to_struct(
         fetch_mapping(client, index, opts),
         flatten=opts.flatten,
-        unhandled=opts.unhandled,
         multivalue=opts.multivalue,
     )
 
@@ -281,29 +282,48 @@ def read_index(
     client_factory: Callable[[], object],
     index: str,
     opts: ScanOptions | None = None,
+    *,
+    probe: tuple[list[dict], int | dict | None] | None = None,
+    observation: Observation | None = None,
+    cache: dict | None = None,
 ) -> DataFrame:
-    """Typed scan: mapping-derived schema + full coercion pipeline
-    (reference entry point 1, ``:214-310``)."""
+    """Typed scan of one index (reference ``process_index``,
+    ``:214-310``): the mapping-derived schema, a scan whose slices the
+    probe's ``hits.total`` caps, the coercion pipeline and, for
+    ``order='global'``, the sort.
+
+    ``probe`` is ``probe_index``'s result when the caller already sent
+    it (``pipeline.dump`` sizes its files from it); otherwise the index
+    is probed here. ``observation`` and ``cache`` go to
+    ``parse_and_coerce``."""
     opts = opts or ScanOptions()
+    _, total = probe or probe_index(client_factory(), index, opts)
     schema = fetch_schema(client_factory(), index, opts)
-    raw = read_index_raw(spark, client_factory, index, opts)
+    raw = read_index_raw(spark, client_factory, index, opts, total)
     df = parse_and_coerce(
-        raw, schema, flatten=opts.flatten, multivalue=opts.multivalue
+        raw,
+        schema,
+        flatten=opts.flatten,
+        multivalue=opts.multivalue,
+        observation=observation,
+        cache=cache,
     )
-    if opts.order == "global" and opts.sort:
-        df = df.orderBy(*_sort_columns(opts.sort, df.columns))
-    return df
+    return _ordered(df, opts)
 
 
-def _sort_columns(sort: str, columns: list[str]):
+def _ordered(df: DataFrame, opts: ScanOptions) -> DataFrame:
+    """``df`` sorted by ``opts.sort`` when ``opts.order`` is
+    ``'global'``; sort fields absent from ``df`` are skipped."""
+    if opts.order != "global" or not opts.sort:
+        return df
     cols = []
-    for part in sort.split(","):
+    for part in opts.sort.split(","):
         fld, _, direction = part.partition(":")
         fld = fld.strip()
-        if fld not in columns:
+        if fld not in df.columns:
             continue  # e.g. default @timestamp absent from this index
         cols.append(F.col(fld).desc() if direction.strip() == "desc" else F.col(fld).asc())
-    return cols or [F.lit(1)]
+    return df.orderBy(*(cols or [F.lit(1)]))
 
 
 def read_pattern_unioned(
@@ -316,14 +336,17 @@ def read_pattern_unioned(
     (SURVEY op #19 union/append across indices): ``unionByName`` with
     missing-column tolerance — dynamically-mapped indices rarely share
     exact schemas (reference README.md:95-97 pairs with DuckDB's
-    ``union_by_name=true`` for the same reason)."""
-    dfs = read_pattern(spark, client_factory, pattern, opts, add_index_column=True)
+    ``union_by_name=true`` for the same reason). ``order='global'``
+    sorts the union once; the indices are read unsorted."""
+    opts = opts or ScanOptions()
+    dfs = read_pattern(spark, client_factory, pattern, replace(opts, order="slice"))
     if not dfs:
         raise ValueError(f"no indices match pattern {pattern!r}")
     out = None
-    for df in dfs.values():
+    for idx, df in dfs.items():
+        df = df.withColumn("_index", F.lit(idx))
         out = df if out is None else out.unionByName(df, allowMissingColumns=True)
-    return out
+    return _ordered(out, opts)
 
 
 def read_pattern(
@@ -331,18 +354,16 @@ def read_pattern(
     client_factory: Callable[[], object],
     pattern: str,
     opts: ScanOptions | None = None,
-    *,
-    add_index_column: bool = False,
 ) -> dict[str, DataFrame]:
     """Pattern fan-out: one typed DataFrame per matching index
-    (reference ``process``, ``:87-95``). Callers union with
+    (reference ``process``, ``:87-95``). Same-mapping indices share one
+    coercion build, kept for this call only (Columns hold JVM
+    references). Callers union with
     ``unionByName(allowMissingColumns=True)`` when a single frame is
     wanted; per-index isolation is the pipeline layer's job."""
     opts = opts or ScanOptions()
-    out: dict[str, DataFrame] = {}
-    for idx in expand_pattern(client_factory(), pattern, opts):
-        df = read_index(spark, client_factory, idx, replace(opts))
-        if add_index_column:
-            df = df.withColumn("_index", F.lit(idx))
-        out[idx] = df
-    return out
+    cache: dict = {}
+    return {
+        idx: read_index(spark, client_factory, idx, opts, cache=cache)
+        for idx in expand_pattern(client_factory(), pattern, opts)
+    }

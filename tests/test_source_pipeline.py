@@ -1075,3 +1075,41 @@ def test_dump_builds_coercion_once_per_mapping(spark, tmp_path, monkeypatch):
     res = dump(spark, lambda: MockES(fixture), "*", str(tmp_path / "b"))
     assert not res.errors and len(res.indices) == 4
     assert len(builds) == 2
+    builds.clear()
+    # read_pattern reads through the same per-index path
+    dfs = read_pattern(spark, lambda: MockES(fixture), "same-*")
+    assert len(dfs) == 3 and len(builds) == 1
+
+
+def test_read_pattern_small_indices_read_one_slice(spark, tmp_path):
+    """``read_pattern`` probes each index like ``dump``: a 300-doc
+    index is one partition and one PIT, not ``slices`` of each."""
+    log = str(tmp_path / "calls.jsonl")
+    docs = make_fixture(300)["metrics-2026.05"]["docs"]
+    fixture = {f"small-{i}": {"mapping": MAPPING, "docs": docs} for i in range(2)}
+    dfs = read_pattern(spark, _logged_es(fixture, log), "small-*")
+    assert {i: df.rdd.getNumPartitions() for i, df in dfs.items()} == {
+        "small-0": 1, "small-1": 1,
+    }
+    assert [df.count() for df in dfs.values()] == [300, 300]
+    assert [c for c, _ in _calls(log)].count("open_pit") == 2
+
+
+def test_read_pattern_unioned_global_order(spark):
+    """``order='global'`` orders the union, not each index: two indices
+    with interleaved timestamps come back as one sorted sequence."""
+    from dump_es_parquet_spark.sources.scan import read_pattern_unioned
+
+    fixture = {
+        name: {"mapping": MAPPING, "docs": [
+            {"host": name, "@timestamp": f"2026-05-{d:02d}T00:00:00"}
+            for d in range(1 + k, 21, 2)
+        ]}
+        for k, name in enumerate(["ts-a", "ts-b"])
+    }
+    opts = ScanOptions(order="global", sort="@timestamp:asc", slices=2)
+    rows = read_pattern_unioned(spark, lambda: MockES(fixture), "ts-*", opts).collect()
+    assert len(rows) == 20
+    ts = [r["@timestamp"] for r in rows]
+    assert ts == sorted(ts)
+    assert {r["_index"] for r in rows} == {"ts-a", "ts-b"}
