@@ -7,8 +7,9 @@ no Python UDF anywhere in the hot path.
 
 Strategy (wire columns, one parse per struct level):
 
-1. ``with_wires`` parses each struct level exactly **once** into named
-   *wire columns* — one ``select`` per nesting depth. The root level
+1. ``build_coercion`` plans the parse of each struct level exactly
+   **once** into named *wire columns*, and ``Coercion.apply`` appends
+   them with one ``select`` per nesting depth. The root level
    parses the document text; each nested level parses its parent's
    (multi-value-collapsed) field text, so nested objects behave exactly
    like the top level (the reference's ``map_source`` recursion). Each
@@ -110,7 +111,7 @@ def scalar_wire_struct(schema: T.StructType) -> T.StructType:
     """ONE parse level: every field — struct fields included — becomes
     StringType. Spark's JSON parser stores the raw JSON text of
     whatever the value is (number, bool, array, **object**), so each
-    nested object survives as text and ``with_wires`` can parse it
+    nested object survives as text and its own wire level can parse it
     the same way as its own level one depth down. This is what makes
     nested levels behave identically to the top level (the reference's
     ``map_source`` recursion): a nested ``{"port":[9200,9300]}`` is
@@ -227,7 +228,7 @@ def coerce_leaf(s: Column, dtype: T.DataType) -> Column:
 
 @dataclass(frozen=True)
 class Wires:
-    """Where ``with_wires`` put each struct level's parse: struct path
+    """Where the wire selects put each struct level's parse: struct path
     (``()`` for the document root) → names of its ``(scalar, array,
     keys)`` wire columns."""
 
@@ -310,20 +311,6 @@ def _select_wires(df: DataFrame, depths: list[list[Column]]) -> DataFrame:
     for cols in depths:
         df = df.select("*", *cols)
     return df
-
-
-def with_wires(
-    df: DataFrame, schema: T.StructType, value_col: str = "value"
-) -> tuple[DataFrame, Wires]:
-    """Append the wire columns of every struct level of ``schema`` to
-    ``df``: one ``select`` per nesting depth, each level's text parsed
-    exactly once (module docstring, step 1). The root level parses
-    ``value_col``; a nested level parses its field's collapsed text from
-    the parent level's wires. Wire names start with a prefix that no
-    column of ``df`` starts with, so no input column — nor a document
-    field literally called ``value`` — is ever shadowed."""
-    depths, wires = _wire_columns(df.columns, schema, value_col)
-    return _select_wires(df, depths), wires
 
 
 # ---------------------------------------------------------------------------
@@ -453,9 +440,9 @@ def parse_and_coerce(
     → typed DataFrame matching ``schema``.
 
     The full reference coercion pipeline (ops #11-#18 of SURVEY.md §2):
-    the wire columns (``with_wires``), then one declarative projection
-    over them — Catalyst sees every cast and keeps the whole thing in
-    codegen over the scan.
+    the wire columns (module docstring, step 1), then one declarative
+    projection over them — Catalyst sees every cast and keeps the whole
+    thing in codegen over the scan.
 
     ``observation`` collects ``warning_aggregates`` on the wired frame,
     between the parse and the typed projection, so the warning report
@@ -491,7 +478,7 @@ def parse_and_coerce(
 
 
 def warning_aggregates(wires: Wires) -> dict[str, Column]:
-    """Aggregate Columns over a ``with_wires`` frame (for
+    """Aggregate Columns over a wired frame (``Coercion.apply``'s, for
     ``df.observe(...)``) reproducing the reference's end-of-run warning
     report (``msg [N documents]``, ``:304-305, 352-353``) without a
     second pass over the data. Like the reference's ``map_source``

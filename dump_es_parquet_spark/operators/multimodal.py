@@ -16,9 +16,6 @@ batch size (``spark.sql.execution.arrow.maxRecordsPerBatch``).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -70,25 +67,6 @@ def decode_image_stub(payload: bytes) -> tuple[int, int, int]:
     height = 64 + n % FAKE_H_MOD
     n_frames = 1 + n % 4
     return width, height, n_frames
-
-
-def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: Arrow batch in → decoded-metadata batch out.
-    Runs once per Arrow batch per partition; memory is bounded by
-    batch size, not partition size."""
-    for pdf in batches:
-        decoded = pdf["payload"].map(decode_image_stub)
-        out = pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": pdf["media_type"],
-                "n_bytes": pdf["payload"].map(len),
-                "width": decoded.map(lambda t: t[0]),
-                "height": decoded.map(lambda t: t[1]),
-                "n_frames": decoded.map(lambda t: t[2]),
-            }
-        )
-        yield out
 
 
 DECODE_SCHEMA = (

@@ -35,7 +35,7 @@ degrade gracefully (correctness never depends on ``w``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _CLOSED = {
@@ -85,14 +85,6 @@ def bin_range_join(
         rb = F.broadcast(rb)
     pred = _CLOSED[closed](F.col(point_col), F.col(lo_col), F.col(hi_col))
     return pb.join(rb, on=_BIN).where(pred).drop(_BIN)
-
-
-def ts_bins(col: Column, bin_width_seconds: float) -> Column:
-    """Helper for time axes: timestamps bin via their epoch micros —
-    ``bin_range_join(points.withColumn("p", ts_bins(...)), ...)`` — or
-    just pass ``unix_micros(ts)`` columns directly; the operator is
-    axis-agnostic."""
-    return F.floor(F.unix_micros(col) / F.lit(bin_width_seconds * 1e6))
 
 
 # ---------------------------------------------------------------------------

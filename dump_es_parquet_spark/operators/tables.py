@@ -75,10 +75,6 @@ def _normalize_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def _stable_metric_name(prefix: str, df: DataFrame) -> str:
     """Deterministic CollectMetrics name for ``df.observe(...)``.
 
@@ -104,38 +100,31 @@ def one_slice_frame(spark: SparkSession, rows, schema) -> DataFrame:
     runners. The pickled-local RDD this replaces launched a Python
     worker per materialization (~150 ms each; measured 0.30 s →
     0.065 s per broadcast-side build, r18), and percolate_bulk alone
-    materializes 7-10 such sides per run. pyarrow raises on lossy
-    conversions, preserving the type-exact-rows contract; NULLs and
-    array columns round-trip exactly (None ≠ NaN — verified by test,
-    which is why this does NOT go through pandas). Rows a pa.array
-    cannot represent fall back to the one-slice pickled RDD."""
-    rows = list(rows)
-    try:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import _parse_datatype_string
+    materializes 7-10 such sides per run. A value pyarrow cannot
+    convert (an int overflowing its column, a str in a numeric column,
+    a number in a string column) raises ``ArrowInvalid`` /
+    ``ArrowTypeError`` here, at construction; note that a Python float
+    in an integer column truncates instead. NULLs and array columns
+    round-trip exactly (None ≠ NaN — verified by test, which is why
+    this does NOT go through pandas)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
 
-        st = (
-            schema
-            if isinstance(schema, T.StructType)
-            else _parse_datatype_string(schema)
-        )
-        pa_schema = to_arrow_schema(st)
-        cols = list(zip(*rows)) or [[] for _ in pa_schema]
-        tbl = pa.Table.from_arrays(
-            [
-                pa.array(list(c), type=f.type)
-                for c, f in zip(cols, pa_schema)
-            ],
-            schema=pa_schema,
-        )
-        # createDataFrame slices the table defaultParallelism ways;
-        # coalesce(1) (narrow, no shuffle) keeps the one-slice shape
-        return spark.createDataFrame(tbl).coalesce(1)
-    except Exception:
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), schema
-        )
+    st = (
+        schema
+        if isinstance(schema, T.StructType)
+        else _parse_datatype_string(schema)
+    )
+    pa_schema = to_arrow_schema(st)
+    cols = list(zip(*rows)) or [[] for _ in pa_schema]
+    tbl = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, pa_schema)],
+        schema=pa_schema,
+    )
+    # createDataFrame slices the table defaultParallelism ways;
+    # coalesce(1) (narrow, no shuffle) keeps the one-slice shape
+    return spark.createDataFrame(tbl).coalesce(1)
 
 
 def _scan_splits_at_least(df: DataFrame, n: int) -> bool:

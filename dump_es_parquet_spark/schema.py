@@ -164,38 +164,6 @@ def mapping_response_to_struct(
     return T.StructType([])
 
 
-def wire_struct(schema: T.StructType) -> T.StructType:
-    """The 'wire' schema used to parse raw ``_source`` JSON before
-    coercion: same shape as ``schema`` but every leaf is a StringType.
-
-    Spark's JSON parser stores the *raw JSON text* into a StringType
-    field whatever the actual JSON value is (number, bool, array,
-    object) — which lets the coercion layer (``coerce.py``) apply the
-    reference's per-value semantics (multi-value collapse, epoch
-    heuristics, int-via-float fallback) as pure Column expressions.
-    """
-    out = []
-    for f in schema.fields:
-        if isinstance(f.dataType, T.StructType):
-            out.append(T.StructField(f.name, wire_struct(f.dataType)))
-        else:
-            out.append(T.StructField(f.name, T.StringType()))
-    return T.StructType(out)
-
-
-def flatten_struct_names(schema: T.StructType, prefix: str = "") -> list[str]:
-    """Dotted paths of all leaf fields (helper for projection pushdown
-    and CSV flattening)."""
-    names: list[str] = []
-    for f in schema.fields:
-        p = f"{prefix}{f.name}"
-        if isinstance(f.dataType, T.StructType):
-            names.extend(flatten_struct_names(f.dataType, p + "."))
-        else:
-            names.append(p)
-    return names
-
-
 def diff_schemas(
     old: T.StructType, new: T.StructType, prefix: str = ""
 ) -> list[dict]:

@@ -12,9 +12,10 @@ from pyspark.sql import Observation, Row
 from pyspark.sql import types as T
 
 from dump_es_parquet_spark.coerce import (
+    _select_wires,
+    build_coercion,
     parse_and_coerce,
     warning_aggregates,
-    with_wires,
 )
 from dump_es_parquet_spark.schema import properties_to_struct
 
@@ -266,7 +267,8 @@ def test_warning_aggregates(spark):
         {"ts": "garbage"},
     ]
     df = spark.createDataFrame([(json.dumps(d),) for d in docs], "value string")
-    df, wires = with_wires(df, SCHEMA)
+    coercion = build_coercion(df.columns, SCHEMA)
+    df, wires = _select_wires(df, coercion.depths), coercion.wires
     aggs = warning_aggregates(wires)
     row = df.agg(*[c.alias(n) for n, c in aggs.items()]).collect()[0]
     assert row.docs == 4
@@ -313,7 +315,8 @@ def test_wire_names_never_shadow_input_columns(spark):
         [(json.dumps({"value": 5, "_wire0_s": 6}), "x")],
         "value string, _wire0_s string",
     )
-    wired, wires = with_wires(df, st)
+    coercion = build_coercion(df.columns, st)
+    wired, wires = _select_wires(df, coercion.depths), coercion.wires
     assert set(df.columns) <= set(wired.columns)
     assert not set(df.columns) & {n for ns in wires.levels.values() for n in ns}
     [r] = parse_and_coerce(df, st).collect()

@@ -3273,7 +3273,6 @@ def test_percolate_bulk_matches_and_agrees_with_percolate(spark):
     from dump_es_parquet_spark.operators.es_search import (
         percolate,
         percolate_bulk,
-        queries_to_conjuncts,
     )
 
     docs = spark.createDataFrame(
@@ -3291,10 +3290,9 @@ def test_percolate_bulk_matches_and_agrees_with_percolate(spark):
         "exact_n": {"term": {"n": 50.0}},
         "is_b": {"term": {"kind": {"value": "b"}}},
     }
-    conj = queries_to_conjuncts(spark, rules)
     got = sorted(
         (r.id, r.query_id)
-        for r in percolate_bulk(docs, conj, id_cols=["id"]).collect()
+        for r in percolate_bulk(docs, rules, id_cols=["id"]).collect()
     )
     want = sorted(
         (r.id, r.query_id)
@@ -3346,10 +3344,9 @@ def test_percolate_bulk_should_minimum_should_match(spark):
             "should": [{"term": {"city": "zzz"}}],
         }},
     }
-    conj = queries_to_conjuncts(spark, rules)
     got = sorted(
         (r.id, r.query_id)
-        for r in percolate_bulk(docs, conj, id_cols=["id"]).collect()
+        for r in percolate_bulk(docs, rules, id_cols=["id"]).collect()
     )
     want = sorted(
         (r.id, r.query_id)
@@ -3382,7 +3379,6 @@ def test_percolate_bulk_exists_and_dateline_and_missing(spark):
         compile_query,
         percolate,
         percolate_bulk,
-        queries_to_conjuncts,
     )
 
     docs = spark.createDataFrame(
@@ -3398,10 +3394,9 @@ def test_percolate_bulk_exists_and_dateline_and_missing(spark):
         "no_n": {"bool": {"filter": [{"exists": {"field": "kind"}}],
                           "must_not": [{"exists": {"field": "n"}}]}},
     }
-    conj = queries_to_conjuncts(spark, rules)
     got = sorted(
         (r.id, r.query_id)
-        for r in percolate_bulk(docs, conj, id_cols=["id"]).collect()
+        for r in percolate_bulk(docs, rules, id_cols=["id"]).collect()
     )
     want = sorted(
         (r.id, r.query_id)
@@ -3474,10 +3469,9 @@ def test_percolate_bulk_must_not(spark):
             "must_not": [{"term": {"kind": "a"}}],
         }},
     }
-    conj = queries_to_conjuncts(spark, rules)
     got = sorted(
         (r.id, r.query_id)
-        for r in percolate_bulk(docs, conj, id_cols=["id"]).collect()
+        for r in percolate_bulk(docs, rules, id_cols=["id"]).collect()
     )
     want = sorted(
         (r.id, r.query_id)
@@ -3507,7 +3501,6 @@ def test_percolate_bulk_range_merge_strictness(spark):
     from dump_es_parquet_spark.operators.es_search import (
         percolate,
         percolate_bulk,
-        queries_to_conjuncts,
     )
 
     docs = spark.createDataFrame(
@@ -3531,10 +3524,9 @@ def test_percolate_bulk_range_merge_strictness(spark):
             {"range": {"n": {"lt": 6}}},
         ]}},
     }
-    conj = queries_to_conjuncts(spark, rules)
     got = sorted(
         (r.id, r.query_id)
-        for r in percolate_bulk(docs, conj, id_cols=["id"]).collect()
+        for r in percolate_bulk(docs, rules, id_cols=["id"]).collect()
     )
     want = sorted(
         (r.id, r.query_id)
@@ -3592,7 +3584,7 @@ def test_percolate_bulk_two_bound_must_range_is_conjunction(spark):
     assert nrows.select("group_id").distinct().count() == 2
     got = sorted(
         (r.id, r.query_id)
-        for r in percolate_bulk(docs, conj, id_cols=["id"]).collect()
+        for r in percolate_bulk(docs, rules, id_cols=["id"]).collect()
     )
     want = sorted(
         (r.id, r.query_id)
@@ -3604,28 +3596,36 @@ def test_percolate_bulk_two_bound_must_range_is_conjunction(spark):
     ]
 
 
-def test_percolate_driver_twins_match_distributed(spark):
-    """VERDICT r17 What's wrong #4 pin: percolate_bulk has TWO
-    implementations of every rule-side statistic — plain Python over
-    the local conjunct tuples (queries_to_conjuncts carries them) and
-    the distributed aggregations (the frame-as-data path for
-    millions-scale rule corpora). They must stay semantically
-    identical forever. This runs BOTH paths on the same rules/docs —
-    covering every channel: string/numeric eq, strict/non-strict
-    two-sided bands, one-sided ranges, exists, prefix, token, phrase,
-    must_not, and a should group (grouped=True) — and compares the
-    final hits, every _ConjStats attribute, and the merged-interval
-    rows field by field."""
-    from dump_es_parquet_spark.operators.es_search import (
-        _distributed_conjunct_stats,
-        _distributed_merged_intervals,
-        _driver_conjunct_stats,
-        _driver_merged_intervals,
-        percolate_bulk,
-        queries_to_conjuncts,
-    )
+#: one rule per percolate_bulk channel: string/numeric eq, strict and
+#: non-strict two-sided bands, one-sided ranges, exists, prefix, token,
+#: phrase, must_not, and a should group (grouped=True)
+_TWIN_RULES = {
+    "band": {"bool": {"must": [
+        {"range": {"n": {"gt": 20, "lte": 200}}}]}},
+    "one_sided": {"range": {"n": {"gte": 200}}},
+    "strict_touch": {"bool": {"must": [
+        {"range": {"n": {"gt": 50}}}, {"range": {"n": {"lt": 50}}}]}},
+    "eq_s": {"term": {"kind": "b"}},
+    "eq_n": {"term": {"n": 50.0}},
+    "exists_k": {"exists": {"field": "kind"}},
+    "pfx": {"prefix": {"kind": "ab"}},
+    "tok": {"match": {"msg": "error"}},
+    "phr": {"match_phrase": {"msg": "disk full"}},
+    "not_b": {"bool": {
+        "must": [{"exists": {"field": "n"}}],
+        "must_not": [{"term": {"kind": "b"}}],
+    }},
+    "two_of": {"bool": {
+        "should": [{"term": {"kind": "a"}},
+                   {"range": {"n": {"lt": 100}}},
+                   {"prefix": {"msg": "err"}}],
+        "minimum_should_match": 2,
+    }},
+}
 
-    docs = spark.createDataFrame(
+
+def _twin_docs(spark):
+    return spark.createDataFrame(
         [
             Row(id=1, kind="a", msg="error disk full now", n=10.0),
             Row(id=2, kind="ab", msg="ok all good", n=150.0),
@@ -3634,49 +3634,48 @@ def test_percolate_driver_twins_match_distributed(spark):
             Row(id=5, kind="abc", msg="disk error full", n=None),
         ]
     )
-    rules = {
-        "band": {"bool": {"must": [
-            {"range": {"n": {"gt": 20, "lte": 200}}}]}},
-        "one_sided": {"range": {"n": {"gte": 200}}},
-        "strict_touch": {"bool": {"must": [
-            {"range": {"n": {"gt": 50}}}, {"range": {"n": {"lt": 50}}}]}},
-        "eq_s": {"term": {"kind": "b"}},
-        "eq_n": {"term": {"n": 50.0}},
-        "exists_k": {"exists": {"field": "kind"}},
-        "pfx": {"prefix": {"kind": "ab"}},
-        "tok": {"match": {"msg": "error"}},
-        "phr": {"match_phrase": {"msg": "disk full"}},
-        "not_b": {"bool": {
-            "must": [{"exists": {"field": "n"}}],
-            "must_not": [{"term": {"kind": "b"}}],
-        }},
-        "two_of": {"bool": {
-            "should": [{"term": {"kind": "a"}},
-                       {"range": {"n": {"lt": 100}}},
-                       {"prefix": {"msg": "err"}}],
-            "minimum_should_match": 2,
-        }},
-    }
-    conj = queries_to_conjuncts(spark, rules)
-    local_rows = conj._local_conjunct_rows
+
+
+def test_percolate_driver_twins_match_distributed(spark):
+    """VERDICT r17 What's wrong #4 pin: percolate_bulk has TWO
+    implementations of every rule-side statistic — plain Python over
+    the conjunct tuples of a stored-query dict and the distributed
+    aggregations over a conjunct-row frame (the frame-as-data path for
+    millions-scale rule corpora). They must stay semantically
+    identical forever. This runs BOTH paths on the same rules/docs —
+    the dict and its queries_to_conjuncts frame, covering every
+    channel — and compares the final hits, every _ConjStats
+    attribute, and the merged-interval rows field by field."""
+    from dump_es_parquet_spark.operators.es_search import (
+        _conjunct_rows,
+        _ConjStats,
+        _distributed_conjunct_stats,
+        _distributed_merged_intervals,
+        _driver_merged_intervals,
+        percolate_bulk,
+        queries_to_conjuncts,
+    )
+
+    docs = _twin_docs(spark)
+    rules = _TWIN_RULES
+    local_rows = _conjunct_rows(rules, "whitespace")
     assert local_rows
-    stripped = conj.select("*")  # frame-as-data: no local tuples
-    assert not hasattr(stripped, "_local_conjunct_rows")
+    frame = queries_to_conjuncts(spark, rules)
 
     got_local = sorted(
         (r.id, r.query_id)
-        for r in percolate_bulk(docs, conj, id_cols=["id"]).collect()
+        for r in percolate_bulk(docs, rules, id_cols=["id"]).collect()
     )
     got_dist = sorted(
         (r.id, r.query_id)
-        for r in percolate_bulk(docs, stripped, id_cols=["id"]).collect()
+        for r in percolate_bulk(docs, frame, id_cols=["id"]).collect()
     )
     assert got_local == got_dist
     assert len({q for _, q in got_local}) >= 8  # most rules fired
 
     # stats twins, attribute by attribute
-    st_l = _driver_conjunct_stats(local_rows)
-    st_d = _distributed_conjunct_stats(stripped)
+    st_l = _ConjStats(local_rows)
+    st_d = _distributed_conjunct_stats(frame)
     for attr in (
         "_n", "_ng", "_mm", "_mm0", "_bad", "_eq_s", "_eq_n", "_rng",
         "_ex", "_pf", "_tok", "_neg_tok", "_ph", "_neg_ph", "_neg_s",
@@ -3691,10 +3690,10 @@ def test_percolate_driver_twins_match_distributed(spark):
     grouped = (st_l._mm or 0) > 1 or st_l._ng < st_l._n
     assert grouped
     pos = ~F.col("negated")
-    rng = stripped.filter(
+    rng = frame.filter(
         pos & F.col("op").isin("gt", "gte", "lt", "lte")
     ).select("query_id", "group_id", "field", "op", "nval", "min_match")
-    gsz = stripped.filter(pos).groupBy("query_id", "group_id").agg(
+    gsz = frame.filter(pos).groupBy("query_id", "group_id").agg(
         F.count(F.lit(1)).alias("_gsz")
     )
     mergeable = (
@@ -3713,6 +3712,71 @@ def test_percolate_driver_twins_match_distributed(spark):
     assert local_merged == dist_rows
     assert any(r[3] is not None and r[4] is not None for r in local_merged)
     assert any(r[3] is None or r[4] is None for r in local_merged)
+
+
+def _construct_jobs(spark, build):
+    """``build()``'s result and the number of Spark jobs it ran,
+    counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"construct-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "percolate_bulk construction")
+    try:
+        out = build()
+    finally:
+        sc.setJobGroup(None, None)
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_percolate_bulk_dict_construction_runs_no_jobs(spark):
+    """Stored queries given as a dict are normalized in-process and
+    every rule-side statistic — the token/phrase-on-numeric-field
+    check included — is computed in Python: constructing
+    percolate_bulk runs ZERO Spark jobs. The same rules given as a
+    queries_to_conjuncts frame (the distributed path) give the same
+    hits."""
+    from dump_es_parquet_spark.operators.es_search import (
+        percolate_bulk,
+        queries_to_conjuncts,
+    )
+
+    phrase_docs = spark.createDataFrame(
+        [
+            Row(id=1, text="a hash join plan", n_chars=250),
+            Row(id=2, text="hash join", n_chars=20),
+            Row(id=3, text="full table scan", n_chars=300),
+            Row(id=4, text="scan table", n_chars=300),
+        ]
+    )
+    # a phrase rule beside a numeric range: the docs have a numeric
+    # field, so the token/phrase field-type check has work to do
+    phrase_rules = {
+        "p_table_scan": {"match_phrase": {"text": "table scan"}},
+        "p_hash_join": {"bool": {"must": [
+            {"match_phrase": {"text": {"query": "hash join"}}},
+            {"range": {"n_chars": {"gte": 200}}},
+        ]}},
+    }
+
+    def hits(docs, rules):
+        out, jobs = _construct_jobs(
+            spark, lambda: percolate_bulk(docs, rules, id_cols=["id"])
+        )
+        assert jobs == 0, sorted(rules)
+        got = sorted((r.id, r.query_id) for r in out.collect())
+        framed = percolate_bulk(
+            docs, queries_to_conjuncts(spark, rules), id_cols=["id"]
+        )
+        assert got == sorted((r.id, r.query_id) for r in framed.collect())
+        return got
+
+    assert hits(_twin_docs(spark), _TWIN_RULES)
+    assert hits(phrase_docs, phrase_rules) == [
+        (1, "p_hash_join"), (3, "p_table_scan")
+    ]
 
 
 def test_percolate_bulk_prefix_conjuncts(spark):
@@ -3762,7 +3826,7 @@ def test_percolate_bulk_prefix_conjuncts(spark):
     ).count() == 1
     got = sorted(
         (r.id, r.query_id)
-        for r in percolate_bulk(docs, conj, id_cols=["id"]).collect()
+        for r in percolate_bulk(docs, rules, id_cols=["id"]).collect()
     )
     want = sorted(
         (r.id, r.query_id)
@@ -3817,10 +3881,9 @@ def test_percolate_bulk_terms_and_wildcard_conjuncts(spark):
         # prefix-shaped wildcard
         "webw": {"wildcard": {"host": "web-*"}},
     }
-    conj = queries_to_conjuncts(spark, rules)
     got = sorted(
         (r.id, r.query_id)
-        for r in percolate_bulk(docs, conj, id_cols=["id"]).collect()
+        for r in percolate_bulk(docs, rules, id_cols=["id"]).collect()
     )
     want = sorted(
         (r.id, r.query_id)
@@ -3879,7 +3942,7 @@ def test_percolate_bulk_match_token_conjuncts(spark):
     conj = queries_to_conjuncts(spark, rules)
     got = sorted(
         (r.id, r.query_id)
-        for r in percolate_bulk(docs, conj, id_cols=["id"]).collect()
+        for r in percolate_bulk(docs, rules, id_cols=["id"]).collect()
     )
     want = sorted(
         (r.id, r.query_id)
@@ -3898,9 +3961,10 @@ def test_percolate_bulk_match_token_conjuncts(spark):
             {"match": {"msg": "a b"}}], "minimum_should_match": 1}}})
     # token rules on numeric fields fail loudly
     ndocs = spark.createDataFrame([(1, 5.0)], "id int, n double")
-    nconj = queries_to_conjuncts(spark, {"q": {"match": {"n": "5"}}})
     with pytest.raises(ValueError, match="string field"):
-        percolate_bulk(ndocs, nconj, id_cols=["id"]).collect()
+        percolate_bulk(
+            ndocs, {"q": {"match": {"n": "5"}}}, id_cols=["id"]
+        ).collect()
 
 
 def test_percolate_bulk_geo_box_conjuncts(spark):
@@ -3941,7 +4005,7 @@ def test_percolate_bulk_geo_box_conjuncts(spark):
     ).distinct().count() == 4
     got = sorted(
         (r.id, r.query_id)
-        for r in percolate_bulk(docs, conj, id_cols=["id"]).collect()
+        for r in percolate_bulk(docs, rules, id_cols=["id"]).collect()
     )
     want = sorted(
         (r.id, r.query_id)
@@ -3974,16 +4038,11 @@ def test_percolate_bulk_min_match_zero_rejected(spark):
 def test_percolate_bulk_exposes_persist_handles(spark):
     """ADVICE r11 (low): the result carries the persisted frames so
     long-lived sessions can release the cache eagerly."""
-    from dump_es_parquet_spark.operators.es_search import (
-        percolate_bulk,
-        queries_to_conjuncts,
-    )
+    from dump_es_parquet_spark.operators.es_search import percolate_bulk
 
     docs = spark.createDataFrame([Row(id=1, n=7.0)])
-    conj = queries_to_conjuncts(
-        spark, {"band": {"range": {"n": {"gte": 5, "lte": 10}}}}
-    )
-    out = percolate_bulk(docs, conj, id_cols=["id"])
+    rules = {"band": {"range": {"n": {"gte": 5, "lte": 10}}}}
+    out = percolate_bulk(docs, rules, id_cols=["id"])
     assert out.count() == 1
     handles = out._percolate_persisted
     assert len(handles) >= 1
@@ -4023,9 +4082,8 @@ def test_percolate_bulk_phrase_conjuncts(spark):
             "must_not": [{"match_phrase": {"msg": "disk ok"}}]}},
         "r_single": {"match_phrase": {"msg": "elsewhere"}},
     }
-    cj = queries_to_conjuncts(spark, rules)
     got = sorted((r.id, r.query_id)
-                 for r in percolate_bulk(docs, cj, ["id"]).collect())
+                 for r in percolate_bulk(docs, rules, ["id"]).collect())
     want = sorted((r.id, r.query_id)
                   for r in percolate(docs, rules, ["id"]).collect())
     assert got == want
@@ -4038,8 +4096,8 @@ def test_percolate_bulk_phrase_conjuncts(spark):
         queries_to_conjuncts(spark, {"r": {"match_phrase": {
             "msg": "   "}}})
     with pytest.raises(ValueError, match="need a string field"):
-        percolate_bulk(docs, queries_to_conjuncts(spark, {
-            "r": {"match_phrase": {"sev": "1 2"}}}), ["id"]).collect()
+        percolate_bulk(docs, {
+            "r": {"match_phrase": {"sev": "1 2"}}}, ["id"]).collect()
 
 
 def test_percolate_bulk_randomized_agreement(spark):
@@ -4055,7 +4113,6 @@ def test_percolate_bulk_randomized_agreement(spark):
     from dump_es_parquet_spark.operators.es_search import (
         percolate,
         percolate_bulk,
-        queries_to_conjuncts,
     )
 
     rnd = random.Random(1207)
@@ -4125,10 +4182,9 @@ def test_percolate_bulk_randomized_agreement(spark):
                     b["should"] = should
                     b["minimum_should_match"] = rnd.randint(1, 2)
                 rules[f"r{qi}"] = {"bool": b}
-        conj = queries_to_conjuncts(spark, rules)
         got = sorted(
             (r.id, r.query_id)
-            for r in percolate_bulk(docs, conj, id_cols=["id"]).collect()
+            for r in percolate_bulk(docs, rules, id_cols=["id"]).collect()
         )
         want = sorted(
             (r.id, r.query_id)
@@ -4160,12 +4216,14 @@ def test_percolate_bulk_guards(spark):
     docs = spark.createDataFrame(
         [Row(id=1, tags=["a"], k="x")],
     )
-    conj = queries_to_conjuncts(spark, {"q": {"term": {"tags": "a"}}})
     with pytest.raises(ValueError, match="scalar"):
-        percolate_bulk(docs, conj, id_cols=["id"]).collect()
+        percolate_bulk(
+            docs, {"q": {"term": {"tags": "a"}}}, id_cols=["id"]
+        ).collect()
     # a rule on a field absent from the docs simply never matches
-    conj2 = queries_to_conjuncts(spark, {"q": {"term": {"nope": "a"}}})
-    assert percolate_bulk(docs, conj2, id_cols=["id"]).count() == 0
+    assert percolate_bulk(
+        docs, {"q": {"term": {"nope": "a"}}}, id_cols=["id"]
+    ).count() == 0
 
 
 def test_streamable_aggs_week_aligns_to_monday(spark, sf_dir):

@@ -1016,8 +1016,9 @@ def test_load_memo_returns_same_plan_object(spark, sf_dir):
 def test_one_slice_frame_arrow_semantics(spark):
     """one_slice_frame is Arrow-backed (r18): the rows must land
     EXACTLY — None stays NULL (never NaN, the pandas-path hazard),
-    array columns round-trip, the frame is one partition, and an
-    empty row list yields an empty frame of the right schema."""
+    array columns round-trip, the frame is one partition, an empty
+    row list yields an empty frame of the right schema, and a value
+    its column cannot hold raises."""
     from dump_es_parquet_spark.operators.tables import one_slice_frame
 
     df = one_slice_frame(
@@ -1033,6 +1034,12 @@ def test_one_slice_frame_arrow_semantics(spark):
 
     empty = one_slice_frame(spark, [], "k string, v double")
     assert empty.count() == 0 and empty.columns == ["k", "v"]
+
+    # a value the column cannot hold raises at construction
+    import pyarrow as pa
+
+    with pytest.raises(pa.ArrowInvalid):
+        one_slice_frame(spark, [("a", 2**40)], "k string, n int")
 
 
 class _SplitProbeStub:

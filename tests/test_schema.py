@@ -9,10 +9,8 @@ from pyspark.sql import types as T
 
 from dump_es_parquet_spark.schema import (
     SchemaWarnings,
-    flatten_struct_names,
     mapping_response_to_struct,
     properties_to_struct,
-    wire_struct,
 )
 
 # FIXTURES.md A1 mapping: every supported type + nested + unhandled.
@@ -135,22 +133,6 @@ def test_mapping_response_legacy_first_doctype_only():
     }
     st = mapping_response_to_struct(resp)
     assert [f.name for f in st.fields] == ["x"]
-
-
-def test_wire_struct_all_strings():
-    st = properties_to_struct(A1_PROPERTIES)
-    w = wire_struct(st)
-    for f in w.fields:
-        if isinstance(f.dataType, T.StructType):
-            continue
-        assert f.dataType == T.StringType(), f.name
-    meta = {f.name: f.dataType for f in w.fields}["meta"]
-    assert isinstance(meta, T.StructType)
-
-
-def test_flatten_struct_names():
-    st = properties_to_struct({"meta": {"properties": {"geo": {"properties": {"city": {"type": "keyword"}}}}}})
-    assert flatten_struct_names(st) == ["meta.geo.city"]
 
 
 def test_diff_schemas_drift():
